@@ -43,7 +43,7 @@ def entry(spark: SparkSession) -> DataFrame:
 def _er_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only: the real pipeline on the deterministic synthetic pages
     fixture — mapInPandas rules extraction (reference-parity), soundex
-    blocking with skew splitting, weighted JW/Lev scoring, star CC. Same
+    blocking with skew splitting, weighted JW/Lev scoring, block-local CC. Same
     wiring as the oracled cluster-size projection (queries.py
     _pipeline_clusters)."""
     from indian_address_parser_spark.queries import _pipeline_clusters

@@ -1,11 +1,33 @@
-"""Transitive clustering: large-star / small-star connected components.
+"""Transitive clustering: connected components over the match graph.
 
-DataFrame-only implementation of the alternating-star algorithm (Kiveris et
-al., "Connected Components in MapReduce and Beyond" — the algorithm the
-north rule names). Converges in O(log n) rounds; components here are
-households (tiny diameter) so 2-4 rounds in practice.
+Two implementations, one per graph shape. Both label each component with
+its minimum ``mention_id`` (Spark's binary string order), so they are
+interchangeable wherever both apply.
 
-Scale notes:
+- :func:`block_local_components` — for KEY-LOCAL graphs, where every edge
+  joins two mentions of the same ``join_key`` and every mention has exactly
+  one key (``operators/pairs.py`` joins on key equality,
+  ``operators/blocking.py`` assigns one key per mention). No component can
+  then span two key groups, so one exchange of the edges by key followed by
+  a per-partition union-find is exact. Callers: the batch pipeline
+  (``plans/er_pipeline.py``), the oracled pipeline projection
+  (``queries._pipeline_clusters``) and the intra-batch step of
+  ``streaming/incremental_er.process_batch``. The partitioning key is the
+  pair self-join's own key, so a union-find task is never more skewed than
+  the join task that produced its edges.
+- :func:`connected_components` — the general alternating-star algorithm
+  (Kiveris et al., "Connected Components in MapReduce and Beyond") for
+  graphs whose edges can CROSS keys: MinHash band pairs in
+  ``q_dedup_canonical_keep`` and ``q_corpus_select`` (a document sits in
+  many bands, so its duplicates chain across them) and
+  ``incremental_er.reconcile`` (its assignment edges join mentions whose
+  blocks straddle the split threshold across batches). ``q_er_clusters``
+  also stays on it: its block-keyed edges are key-local, but the query
+  projects the key away and is the oracled test of this algorithm.
+  Converges in O(log n) rounds; components here are small so 2-4 rounds
+  in practice.
+
+Star-CC scale notes:
 - The star loop runs over ``xxhash64`` longs (8-byte shuffle keys instead
   of ~50-byte urls); final labels are re-derived as ``min(mention_id)``
   per component — deterministic across runs, partition layouts and
@@ -24,8 +46,69 @@ Scale notes:
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _union_find_labels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` body: every edge of one partition → one
+    (mention_id, cluster_id) row per node.
+
+    A partition holds whole key groups, so its components are complete
+    once all of its batches are read. Node ids are factorized in sorted
+    order, so code order is string order; union always hangs the larger
+    root under the smaller, so each root is its component's minimum code.
+    Python ``str`` order is code-point order, which is the byte order of
+    UTF-8 — the order of Spark's ``min`` on strings."""
+    import numpy as np
+
+    src, dst = [], []
+    for pdf in batches:
+        src.append(pdf["src"].to_numpy(dtype=object))
+        dst.append(pdf["dst"].to_numpy(dtype=object))
+    n = sum(len(a) for a in src)
+    if n == 0:
+        # typed empty batch: a frame of empty lists would default to
+        # float64, which Arrow cannot cast to the string schema
+        yield pd.DataFrame(
+            {"mention_id": pd.Series([], dtype=object), "cluster_id": pd.Series([], dtype=object)}
+        )
+        return
+    codes, ids = pd.factorize(np.concatenate(src + dst), sort=True)
+    parent = list(range(len(ids)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(codes[:n].tolist(), codes[n:].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    roots = np.fromiter((find(i) for i in range(len(ids))), dtype=np.int64, count=len(ids))
+    yield pd.DataFrame({"mention_id": ids, "cluster_id": ids[roots]})
+
+
+def block_local_components(edges: DataFrame) -> DataFrame:
+    """Key-local edges(src, dst, join_key) → assignments(mention_id, cluster_id).
+
+    Exact only when no component spans two ``join_key`` values (module
+    docstring); the labels are then those :func:`connected_components`
+    gives. One exchange of the edges by key, then a union-find per
+    partition: no loop, no convergence jobs, no checkpoints — the returned
+    frame is lazy. One row per edge endpoint; mentions without edges are
+    not returned (``attach_clusters`` makes them singletons)."""
+    return (
+        edges.select("src", "dst", "join_key")
+        .repartition("join_key")
+        .select("src", "dst")
+        .mapInPandas(_union_find_labels, "mention_id string, cluster_id string")
+    )
 
 
 def _hash_id(col):

@@ -82,7 +82,11 @@ def _weight_col(field: str, weight: float) -> Column:
 
 
 def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
-    """→ edges(src, dst, score) for pairs scoring ≥ threshold.
+    """→ edges(src, dst, score[, join_key]) for pairs scoring ≥ threshold.
+
+    ``join_key`` is passed through when the pair frame carries it (as
+    ``candidate_pairs`` output does): it is what makes the edges key-local
+    for ``cc.block_local_components``.
 
     Two-stage plan when Jaro-Winkler fields are enabled:
       1. JVM stage (whole-stage codegen, inside the pair-join stage): the
@@ -118,6 +122,7 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
     weight_cols = [_weight_col(f, w) for f, w, _, _ in FIELD_WEIGHTS]
     total_weight = sum(weight_cols[1:], weight_cols[0])
 
+    key = [F.col("join_key")] if "join_key" in pairs.columns else []
     if not jw_fields:
         scored = pairs.withColumn(
             "score",
@@ -127,6 +132,7 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
             F.col("mention_id_a").alias("src"),
             F.col("mention_id_b").alias("dst"),
             F.round("score", 6).alias("score"),
+            *key,
         )
 
     # guard booleans resolved JVM-side so only the raw strings cross the wire
@@ -135,6 +141,7 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
         F.col("mention_id_b"),
         partial_sim.alias("partial_sim"),
         total_weight.alias("total_weight"),
+        *key,
     ]
     for f, _, guarded in jw_fields:
         narrow_cols += [F.col(f"{f}_a"), F.col(f"{f}_b")]
@@ -165,4 +172,5 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
         F.col("mention_id_a").alias("src"),
         F.col("mention_id_b").alias("dst"),
         F.round("score", 6).alias("score"),
+        *key,
     )

@@ -5,14 +5,22 @@ Stage graph (SURVEY.md §3.4):
   pages ─extract(mapInPandas)→ mentions  [ckpt 1, narrow]
         ─block keys (+skew split)→ blocked [ckpt 2, one agg]
         ─self-join→ pairs ─score→ edges   [ckpt 3, the big shuffle]
-        ─large/small-star→ clusters       [ckpt 4, iterated]
+        ─by join_key→ union-find→ clusters [ckpt 4, one exchange]
 
-Each stage writes parquet plus a ``_manifest.json`` (stage name, input
-fingerprint, row count, per-partition counts). ``run_pipeline`` skips a
-stage when its manifest validates against the current input fingerprint —
-a rerun after a crash resumes mid-run without recomputation (north rule).
-Counters come from ``df.observe`` where cheap and from the manifest rows
-otherwise; they are also the per-partition lineage record.
+Clustering is block-local: every edge joins two mentions of one
+``join_key`` and every mention has one key, so no component crosses a key
+group and ``cc.block_local_components`` labels them with one exchange and
+a per-partition union-find — no iterated star rounds.
+
+Each stage writes parquet plus a ``_manifest.json`` (stage name, format
+version, input fingerprint, row count, per-partition counts, counters).
+``run_pipeline`` skips a stage when its manifest matches the current input
+fingerprint AND the stage's current format version — a rerun after a
+crash resumes mid-run without recomputation (north rule), while a stage
+written in an older format is recomputed rather than fed to a consumer
+that cannot read it. The row and per-partition counts and the stage
+counters come from two jobs over the re-read stage output
+(``_finish_manifest``); they are also the per-partition lineage record.
 
 On a real cluster the parquet roots live on HDFS/S3 and the same logic
 holds; Iceberg would add snapshot ids to the manifest — parquet + manifest
@@ -30,12 +38,19 @@ from pyspark.sql import functions as F
 
 from indian_address_parser_spark.eval.pairwise import pairwise_scores
 from indian_address_parser_spark.operators.blocking import with_block_key
-from indian_address_parser_spark.operators.cc import attach_clusters, connected_components
+from indian_address_parser_spark.operators.cc import attach_clusters, block_local_components
 from indian_address_parser_spark.operators.extract import extract_mentions
 from indian_address_parser_spark.operators.pairs import candidate_pairs
 from indian_address_parser_spark.operators.scoring import DEFAULT_THRESHOLD, score_pairs
 
 STAGES = ("mentions", "blocked", "edges", "clusters")
+
+# Bump a stage's version whenever the columns it writes change. A manifest
+# with another version — or with none, written before versions were
+# recorded, which counts as 1 — does not validate, so an old work dir
+# recomputes that stage. edges 2: carries ``join_key``, which the
+# block-local clusters stage partitions by.
+STAGE_VERSIONS = {"mentions": 1, "blocked": 1, "edges": 2, "clusters": 1}
 
 
 def _manifest_path(root: str, stage: str) -> str:
@@ -125,6 +140,7 @@ def _finish_manifest(
         counters = {k: (v if not hasattr(v, "item") else v.item()) for k, v in row.asDict().items()}
     manifest = {
         "stage": stage,
+        "version": STAGE_VERSIONS[stage],
         "input_fingerprint": input_fp,
         "rows": sum(r["count"] for r in per_part),
         "partitions": {str(r["pid"]): r["count"] for r in per_part},
@@ -147,7 +163,11 @@ def _stage_valid(root: str, stage: str, input_fp: str) -> bool:
             manifest = json.load(f)
     except (OSError, json.JSONDecodeError):
         return False
-    return manifest.get("stage") == stage and manifest.get("input_fingerprint") == input_fp
+    return (
+        manifest.get("stage") == stage
+        and manifest.get("version", 1) == STAGE_VERSIONS[stage]
+        and manifest.get("input_fingerprint") == input_fp
+    )
 
 
 def _input_fingerprint(pages: DataFrame) -> str:
@@ -167,23 +187,11 @@ def run_pipeline(
     labeled_pairs: DataFrame | None = None,
     resume: bool = True,
     iceberg_prefix: str | None = None,
-    cc_stars: str = "auto",
-    cc_giant_degree_threshold: int = 1_000_000,
-    cc_audit_min_nodes: int = 100_000_000,
-    _cc_strategy_log: list | None = None,
 ) -> dict:
     """Run (or resume) the full pipeline. Returns stage row counts, timings
     and (if labeled_pairs given) pairwise P/R/F1. ``iceberg_prefix`` opts
     stage checkpoints into Iceberg tables when the runtime jar is present
-    (see _write_stage); manifests drive resume either way. ``cc_stars``
-    picks the connected-components round strategy ("auto" measures the max
-    node degree per round and switches window→join past the giant-component
-    threshold; "window" for bounded component sizes, "join" for graphs with
-    possible giant components — see operators/cc.py).
-    ``cc_giant_degree_threshold`` tunes the auto switch;
-    ``cc_audit_min_nodes`` gates CC's runtime hash-collision audit on graph
-    size (see operators/cc.py — 0 forces it); ``_cc_strategy_log`` (tests)
-    receives the per-round strategy choices."""
+    (see _write_stage); manifests drive resume either way."""
     os.makedirs(work_dir, exist_ok=True)
     fp = _input_fingerprint(pages)
     report: dict = {"input_fingerprint": fp, "stages": {}, "resumed": []}
@@ -221,13 +229,7 @@ def run_pipeline(
         "clusters",
         lambda: attach_clusters(
             mentions.select("mention_id", "url", "normalized"),
-            connected_components(
-                edges,
-                stars=cc_stars,
-                giant_degree_threshold=cc_giant_degree_threshold,
-                audit_min_nodes=cc_audit_min_nodes,
-                _strategy_log=_cc_strategy_log,
-            ),
+            block_local_components(edges),
         ),
     )
 

@@ -12,6 +12,7 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -51,32 +52,29 @@ def _warm_python_workers(spark) -> None:
     # Micro ER chain over a tiny in-memory synthetic fixture: compiles the
     # expensive whole-stage-codegen classes and Python-UDF plan shapes the
     # real queries/pipeline hit (extraction mapInPandas, blocking join,
-    # JW scoring, star-CC rounds with their checkpoints and window label).
+    # JW scoring, the pipeline's block-local CC exchange + union-find).
     # Janino compilation + JIT of these shapes measured 20-30 s on their
     # FIRST execution in a session (er_pipeline link stage: 34 s cold vs
     # 5.4 s warm at 60k pages; er_clusters 21 s cold vs 7-13 s warm) —
     # steady-state code is the honest throughput baseline for a timed
     # harness, exactly like the worker warmup above. ~3-5 s, build-time
     # only.
-    try:
-        from indian_address_parser_spark.operators.blocking import with_block_key
-        from indian_address_parser_spark.operators.cc import (
-            attach_clusters,
-            connected_components,
-        )
-        from indian_address_parser_spark.operators.extract import extract_mentions
-        from indian_address_parser_spark.operators.pairs import candidate_pairs
-        from indian_address_parser_spark.operators.scoring import score_pairs
-        from indian_address_parser_spark.sources.pages import generate
+    from indian_address_parser_spark.operators.blocking import with_block_key
+    from indian_address_parser_spark.operators.cc import (
+        attach_clusters,
+        block_local_components,
+    )
+    from indian_address_parser_spark.operators.extract import extract_mentions
+    from indian_address_parser_spark.operators.pairs import candidate_pairs
+    from indian_address_parser_spark.operators.scoring import score_pairs
+    from indian_address_parser_spark.sources.pages import generate
 
-        pages = generate(spark, n_households=60)["pages"].select("url", "text")
-        mentions = extract_mentions(pages)
-        edges = score_pairs(candidate_pairs(with_block_key(mentions)))
-        attach_clusters(
-            mentions.select("mention_id"), connected_components(edges)
-        ).count()
-    except Exception:
-        pass  # warmup is best-effort
+    pages = generate(spark, n_households=60)["pages"].select("url", "text")
+    mentions = extract_mentions(pages)
+    edges = score_pairs(candidate_pairs(with_block_key(mentions)))
+    attach_clusters(
+        mentions.select("mention_id"), block_local_components(edges)
+    ).count()
 
 
 def get_spark(
@@ -165,5 +163,9 @@ def get_spark(
         try:
             _warm_python_workers(spark)
         except Exception:
-            pass  # warmup is best-effort; never fail session construction
+            # best-effort: never fail session construction, but say so —
+            # timings from an unwarmed session include first-use costs
+            logging.getLogger(__name__).warning(
+                "Spark session warm-up failed; continuing unwarmed", exc_info=True
+            )
     return spark

@@ -303,7 +303,8 @@ def q_er_cluster_sizes(spark, sf_dir):
 # arithmetic (sources/pages.py), so its ground truth is: the oracle computes
 # what a correct pipeline MUST output directly from the generative model
 # (households → variants → pages), while Spark runs the real pipeline
-# (mapInPandas extraction → soundex blocking → JW/Lev scoring → star CC).
+# (mapInPandas extraction → soundex blocking → JW/Lev scoring → block-local
+# CC).
 # This is an end-to-end correctness gate stronger than same-algorithm
 # replay: ANY stage regression (missed mention, dropped edge, merged
 # households) shifts these projections and fails the hash.
@@ -327,13 +328,12 @@ def _pipeline_clusters(spark):
 
     Shared by the oracled cluster-size projection below AND the rows-only
     ``er_pipeline_full`` driver entry (__spark_entry__.py) — one wiring,
-    one fixture size. NOTE: connected_components launches its star-loop
-    jobs at DataFrame-construction time (checkpoint + fingerprint per
-    round), so only call this when clusters are actually needed."""
+    one fixture size. The edges carry their ``join_key``, so CC is the
+    block-local union-find the batch pipeline uses (operators/cc.py)."""
     from indian_address_parser_spark.operators.blocking import with_block_key
     from indian_address_parser_spark.operators.cc import (
         attach_clusters,
-        connected_components,
+        block_local_components,
     )
     from indian_address_parser_spark.operators.pairs import candidate_pairs
     from indian_address_parser_spark.operators.scoring import score_pairs
@@ -341,7 +341,7 @@ def _pipeline_clusters(spark):
     mentions = _pipeline_mentions(spark)
     edges = score_pairs(candidate_pairs(with_block_key(mentions)))
     return attach_clusters(
-        mentions.select("mention_id"), connected_components(edges)
+        mentions.select("mention_id"), block_local_components(edges)
     )
 
 

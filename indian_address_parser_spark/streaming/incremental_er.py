@@ -14,7 +14,7 @@ in a real deployment. Per micro-batch:
      mention whose best representative clears the threshold attaches to
      that cluster (ties: highest score, then lexicographic-min cluster)
   3. the remainder run plain batch ER among themselves (candidate pairs
-     → scoring → star CC, ``operators/cc.py``) and mint NEW clusters
+     → scoring → block-local CC, ``operators/cc.py``) and mint NEW clusters
   4. one representative row per new cluster (the cluster-min mention —
      deterministic) is appended to the state table; the batch's full
      (mention_id, cluster_id) assignment is appended to the sink
@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from indian_address_parser_spark.operators.blocking import with_block_key
 from indian_address_parser_spark.operators.cc import (
     attach_clusters,
+    block_local_components,
     connected_components,
 )
 from indian_address_parser_spark.operators.extract import extract_mentions
@@ -147,9 +148,12 @@ def process_batch(
     else:
         remaining = blocked
 
-    # intra-batch ER among the unmatched → new clusters (singletons incl.)
+    # intra-batch ER among the unmatched → new clusters (singletons incl.);
+    # candidate_pairs edges are key-local, so block-local CC is exact here
     edges = score_pairs(candidate_pairs(remaining), threshold=threshold)
-    assign = connected_components(edges, src="src", dst="dst")
+    # both writes below read the assignments: materialize them once so the
+    # pair scoring under them runs once per batch, not once per write
+    assign = block_local_components(edges).localCheckpoint(eager=True)
     new_clusters = attach_clusters(
         remaining.select("mention_id", "block_key", *PAIR_FIELDS), assign
     )
@@ -227,7 +231,11 @@ def reconcile(
     mention_id that run BEFORE the Python Jaro-Winkler kernel, so after a
     healthy incremental run the Arrow UDF sees only the thin cross-batch
     boundary set, not the full pair stream. Everything else is the exact
-    batch operator chain (blocking agg+join, pruned self-join, star CC).
+    batch operator chain (blocking agg+join, pruned self-join), except CC:
+    the assignment edges come from each batch's own blocking (attach joins
+    on ``block_key``, and a block's split state can differ between a batch
+    and the union), so they can cross the union's join keys and the graph
+    needs star CC, not the batch pipeline's block-local union-find.
     """
     mentions = spark.read.parquet(mentions_dir).dropDuplicates(["mention_id"])
     assigns = (

@@ -35,16 +35,6 @@ def main() -> None:
         help="catalog.db prefix for Iceberg stage checkpoints (requires the "
         "iceberg-spark-runtime jar; falls back to parquet when absent)",
     )
-    ap.add_argument(
-        "--cc-stars",
-        choices=["auto", "window", "join"],
-        default="auto",
-        help="connected-components round strategy: 'auto' (default: window "
-        "rounds until the measured max node degree crosses the giant-"
-        "component threshold, then join rounds), 'window' (fastest; assumes "
-        "bounded component sizes) or 'join' (partial-agg + AQE "
-        "skew-splittable, for inputs that may form giant clusters)",
-    )
     args = ap.parse_args()
 
     from indian_address_parser_spark.plans.er_pipeline import run_pipeline
@@ -70,7 +60,6 @@ def main() -> None:
         labeled_pairs=labeled,
         resume=not args.no_resume,
         iceberg_prefix=args.iceberg_prefix,
-        cc_stars=args.cc_stars,
     )
     print(json.dumps(report, indent=2))
 

@@ -24,9 +24,10 @@ from pyspark.sql import functions as F
 DIGIT_FIELDS = ("house_no", "street", "block", "sector", "khasra")
 
 
-def _soundex_or_empty(col):
-    letters = F.regexp_replace(F.coalesce(col, F.lit("")), "[^A-Za-z]", "")
-    return F.when(F.length(letters) > 0, F.soundex(letters)).otherwise(F.lit(""))
+def _soundex_or_empty(col: str) -> str:
+    """SQL: soundex of the column's letters, '' when it has none."""
+    letters = f"regexp_replace(coalesce({col}, ''), '[^A-Za-z]', '')"
+    return f"CASE WHEN length({letters}) > 0 THEN soundex({letters}) ELSE '' END"
 
 
 def with_block_key(mentions: DataFrame, max_block_size: int = 200) -> DataFrame:
@@ -40,19 +41,19 @@ def with_block_key(mentions: DataFrame, max_block_size: int = 200) -> DataFrame:
     """
     # Blocking favours recall: when refinement swallowed the CITY span
     # (e.g. a locality+city merge in comma-free text), fall back to the
-    # city evidence in the normalized text itself. Pure JVM regex.
-    block_city = F.coalesce(
-        F.col("city"),
-        F.when(F.col("normalized").rlike(r"\bNEW DELHI\b"), F.lit("NEW DELHI")),
-        F.when(F.col("normalized").rlike(r"\bDELHI\b"), F.lit("DELHI")),
+    # city evidence in the normalized text itself. Pure JVM regex. The
+    # expressions are SQL text, parsed by the JVM in one call each (see
+    # scoring.py); backslashes in the regex literals are doubled for the
+    # SQL string literal.
+    block_city = (
+        r"coalesce(city, CASE WHEN normalized RLIKE '\\bNEW DELHI\\b' THEN 'NEW DELHI' END,"
+        r" CASE WHEN normalized RLIKE '\\bDELHI\\b' THEN 'DELHI' END)"
     )
     keyed = mentions.withColumn(
         "block_key",
-        F.concat_ws(
-            "|",
-            F.coalesce(F.col("pincode"), F.lit("")),
-            F.coalesce(block_city, F.lit("")),
-            _soundex_or_empty(F.col("locality")),
+        F.expr(
+            f"concat_ws('|', coalesce(pincode, ''), coalesce({block_city}, ''),"
+            f" {_soundex_or_empty('locality')})"
         ),
     )
     # Block sizes via a partial-aggregated count joined back HINT-FREE: AQE
@@ -68,25 +69,20 @@ def with_block_key(mentions: DataFrame, max_block_size: int = 200) -> DataFrame:
     # digit signatures computed ONCE per mention (used as the secondary
     # blocking component and as scoring hard features — hoisting them out
     # of the pair join halves the per-pair expression work)
-    for f in DIGIT_FIELDS:
-        keyed = keyed.withColumn(
-            f"{f}_digits",
-            F.when(
-                F.col(f).isNotNull(), F.regexp_replace(F.col(f), "[^0-9/]", "")
-            ),
+    keyed = keyed.withColumns({
+        f"{f}_digits": F.expr(
+            f"CASE WHEN {f} IS NOT NULL THEN regexp_replace({f}, '[^0-9/]', '') END"
         )
+        for f in DIGIT_FIELDS
+    })
 
-    secondary = F.concat_ws(
-        "|",
-        _soundex_or_empty(F.col("street")),
-        F.coalesce(F.col("house_no_digits"), F.lit("")),
-    )
+    secondary = f"concat_ws('|', {_soundex_or_empty('street')}, coalesce(house_no_digits, ''))"
     return keyed.withColumn(
         "join_key",
-        F.when(
-            F.col("block_size") > F.lit(max_block_size),
-            F.concat_ws("||", F.col("block_key"), secondary),
-        ).otherwise(F.col("block_key")),
+        F.expr(
+            f"CASE WHEN block_size > {int(max_block_size)}"
+            f" THEN concat_ws('||', block_key, {secondary}) ELSE block_key END"
+        ),
     )
 
 

@@ -50,18 +50,14 @@ BLOCK_INPUT_COLS = ("mention_id", "normalized") + RAW_FIELDS
 
 def candidate_pairs(blocked: DataFrame) -> DataFrame:
     """→ one row per unordered candidate pair with both sides' fields."""
-    usable = blocked.where(F.col("block_key") != "||")
+    usable = blocked.where("block_key != '||'")
 
     cols = ["mention_id", "join_key", *PAIR_FIELDS]
-    left = usable.select([F.col(c).alias(f"{c}_a") for c in cols])
-    right = usable.select([F.col(c).alias(f"{c}_b") for c in cols])
+    left = usable.selectExpr(*[f"{c} AS {c}_a" for c in cols])
+    right = usable.selectExpr(*[f"{c} AS {c}_b" for c in cols])
 
     return (
-        left.join(
-            right,
-            (F.col("join_key_a") == F.col("join_key_b"))
-            & (F.col("mention_id_a") < F.col("mention_id_b")),
-        )
+        left.join(right, F.expr("join_key_a = join_key_b AND mention_id_a < mention_id_b"))
         .drop("join_key_b")
         .withColumnRenamed("join_key_a", "join_key")
     )

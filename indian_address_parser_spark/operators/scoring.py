@@ -5,7 +5,7 @@ Weighted null-aware combination over the tagged fields (north star:
 (house_no, street, locality, city, state, pincode)").
 
 Design:
-- Levenshtein similarity (``F.levenshtein`` — JVM built-in, codegen) for
+- Levenshtein similarity (``levenshtein`` — JVM built-in, codegen) for
   locality/city/state; Jaro-Winkler (Arrow pandas UDF, DuckDB-parity) for
   house/street where prefix weighting helps.
 - Digit-bearing fields (house_no, street, sector, block, khasra) carry the
@@ -19,7 +19,7 @@ Design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from indian_address_parser_spark.functions.udfs import jaro_winkler_udf
@@ -32,7 +32,7 @@ from indian_address_parser_spark.functions.udfs import jaro_winkler_udf
 # survivor set. Running a Python UDF on the UNPRUNED pair stream measurably
 # anti-scaled (32 Python workers contending with the join's JVM threads ran
 # 3-10× slower than 8 — see BENCH/BASELINE.md); post-prune it is noise.
-# Levenshtein (F.levenshtein, whole-stage codegen) covers the wide fields.
+# Levenshtein (JVM built-in, whole-stage codegen) covers the wide fields.
 FIELD_WEIGHTS = (
     ("house_no", 0.30, True, True),
     ("street", 0.15, True, True),
@@ -48,22 +48,24 @@ FIELD_WEIGHTS = (
 DEFAULT_THRESHOLD = 0.80
 
 
-def _lev_sim(a: Column, b: Column) -> Column:
-    ml = F.greatest(F.length(a), F.length(b))
-    return F.when(ml == 0, F.lit(1.0)).otherwise(
-        1.0 - F.levenshtein(a, b) / ml.cast("double")
+# The JVM-side terms are SQL text: the JVM parses one expression string in
+# a single call, where each Column-API operator is a py4j round trip (~175
+# for one digit-guarded Levenshtein term). Literals carry a ``D`` suffix —
+# a bare ``1.0`` in Spark SQL is DECIMAL(2,1), not a double.
+def _lev_term(field: str, weight: float, digit_guarded: bool) -> str:
+    """SQL: the weighted Levenshtein similarity of one field, 0 when
+    either side is null."""
+    a, b = f"{field}_a", f"{field}_b"
+    ml = f"greatest(length({a}), length({b}))"
+    sim = (
+        f"CASE WHEN {ml} = 0 THEN 1.0D"
+        f" ELSE 1.0D - levenshtein({a}, {b}) / CAST({ml} AS DOUBLE) END"
     )
-
-
-def field_similarity(field: str, digit_guarded: bool, use_jw: bool) -> Column:
-    a, b = F.col(f"{field}_a"), F.col(f"{field}_b")
-    base = jaro_winkler_udf(a, b) if use_jw else _lev_sim(a, b)
     if digit_guarded:
         # digit signatures were precomputed per mention in blocking
-        base = F.when(
-            F.col(f"{field}_digits_a") == F.col(f"{field}_digits_b"), base
-        ).otherwise(F.lit(0.0))
-    return F.when(a.isNull() | b.isNull(), F.lit(None).cast("double")).otherwise(base)
+        sim = f"CASE WHEN {field}_digits_a = {field}_digits_b THEN {sim} ELSE 0.0D END"
+    sim = f"CASE WHEN {a} IS NULL OR {b} IS NULL THEN CAST(NULL AS DOUBLE) ELSE {sim} END"
+    return f"coalesce({sim} * {weight!r}D, 0.0D)"
 
 
 _W_TOTAL = sum(w for _, w, _, _ in FIELD_WEIGHTS)
@@ -74,11 +76,19 @@ _W_HOUSE = dict((f, w) for f, w, _, _ in FIELD_WEIGHTS)["house_no"]
 _HOUSE_MISMATCH_CEILING = (_W_TOTAL - _W_HOUSE) / _W_TOTAL
 
 
-def _weight_col(field: str, weight: float) -> Column:
-    return F.when(
-        F.col(f"{field}_a").isNotNull() & F.col(f"{field}_b").isNotNull(),
-        F.lit(weight),
-    ).otherwise(F.lit(0.0))
+def _weight(field: str, weight: float) -> str:
+    """SQL: the field's weight when both sides are present, else 0."""
+    return (
+        f"CASE WHEN {field}_a IS NOT NULL AND {field}_b IS NOT NULL"
+        f" THEN {weight!r}D ELSE 0.0D END"
+    )
+
+
+def _edges(scored: DataFrame, threshold: float, key: list[str]) -> DataFrame:
+    """→ edges(src, dst, score[, join_key]) of the pairs scoring ≥ threshold."""
+    return scored.where(f"score >= {float(threshold)!r}D").selectExpr(
+        "mention_id_a AS src", "mention_id_b AS dst", "round(score, 6) AS score", *key
+    )
 
 
 def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
@@ -109,48 +119,38 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
         # cost lever — within a block most pairs are cross-household and die
         # here inside whole-stage codegen.
         pairs = pairs.where(
-            F.col("house_no_a").isNull()
-            | F.col("house_no_b").isNull()
-            | (F.col("house_no_digits_a") == F.col("house_no_digits_b"))
+            "house_no_a IS NULL OR house_no_b IS NULL OR house_no_digits_a = house_no_digits_b"
         )
 
-    jvm_terms = [
-        F.coalesce(field_similarity(f, g, False) * F.lit(w), F.lit(0.0))
-        for f, w, g in jvm_fields
-    ]
-    partial_sim = sum(jvm_terms[1:], jvm_terms[0]) if jvm_terms else F.lit(0.0)
-    weight_cols = [_weight_col(f, w) for f, w, _, _ in FIELD_WEIGHTS]
-    total_weight = sum(weight_cols[1:], weight_cols[0])
+    partial_sim = " + ".join(_lev_term(f, w, g) for f, w, g in jvm_fields) or "0.0D"
+    total_weight = " + ".join(_weight(f, w) for f, w, _, _ in FIELD_WEIGHTS)
 
-    key = [F.col("join_key")] if "join_key" in pairs.columns else []
+    key = ["join_key"] if "join_key" in pairs.columns else []
     if not jw_fields:
         scored = pairs.withColumn(
             "score",
-            F.when(total_weight > 0, partial_sim / total_weight).otherwise(F.lit(0.0)),
+            F.expr(
+                f"CASE WHEN ({total_weight}) > 0"
+                f" THEN ({partial_sim}) / ({total_weight}) ELSE 0.0D END"
+            ),
         )
-        return scored.where(F.col("score") >= F.lit(threshold)).select(
-            F.col("mention_id_a").alias("src"),
-            F.col("mention_id_b").alias("dst"),
-            F.round("score", 6).alias("score"),
-            *key,
-        )
+        return _edges(scored, threshold, key)
 
     # guard booleans resolved JVM-side so only the raw strings cross the wire
     narrow_cols = [
-        F.col("mention_id_a"),
-        F.col("mention_id_b"),
-        partial_sim.alias("partial_sim"),
-        total_weight.alias("total_weight"),
+        "mention_id_a",
+        "mention_id_b",
+        f"{partial_sim} AS partial_sim",
+        f"{total_weight} AS total_weight",
         *key,
     ]
     for f, _, guarded in jw_fields:
-        narrow_cols += [F.col(f"{f}_a"), F.col(f"{f}_b")]
-        ok = F.col(f"{f}_a").isNotNull() & F.col(f"{f}_b").isNotNull()
+        ok = f"{f}_a IS NOT NULL AND {f}_b IS NOT NULL"
         if guarded:
-            ok = ok & (F.col(f"{f}_digits_a") == F.col(f"{f}_digits_b"))
-        narrow_cols.append(ok.alias(f"{f}_jw_ok"))
+            ok += f" AND {f}_digits_a = {f}_digits_b"
+        narrow_cols += [f"{f}_a", f"{f}_b", f"{ok} AS {f}_jw_ok"]
 
-    narrow = pairs.select(narrow_cols).repartition(
+    narrow = pairs.selectExpr(*narrow_cols).repartition(
         pairs.sparkSession.sparkContext.defaultParallelism
     )
 
@@ -168,9 +168,4 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
             F.lit(0.0)
         ),
     )
-    return scored.where(F.col("score") >= F.lit(threshold)).select(
-        F.col("mention_id_a").alias("src"),
-        F.col("mention_id_b").alias("dst"),
-        F.round("score", 6).alias("score"),
-        *key,
-    )
+    return _edges(scored, threshold, key)

@@ -13,14 +13,17 @@ group and ``cc.block_local_components`` labels them with one exchange and
 a per-partition union-find — no iterated star rounds.
 
 Each stage writes parquet plus a ``_manifest.json`` (stage name, format
-version, input fingerprint, row count, per-partition counts, counters).
-``run_pipeline`` skips a stage when its manifest matches the current input
-fingerprint AND the stage's current format version — a rerun after a
-crash resumes mid-run without recomputation (north rule), while a stage
-written in an older format is recomputed rather than fed to a consumer
-that cannot read it. The row and per-partition counts and the stage
-counters come from two jobs over the re-read stage output
-(``_finish_manifest``); they are also the per-partition lineage record.
+version, input fingerprint, schema, row count, counters). ``run_pipeline``
+skips a stage when its manifest matches the current input fingerprint AND
+the stage's current format version — a rerun after a crash resumes mid-run
+without recomputation (north rule), while a stage written in an older
+format, or whose manifest records no schema, is recomputed rather than fed
+to a consumer that cannot read it. A stage runs no job beyond its write:
+the row count and counters are observed (``df.observe``) in the write job
+itself, and the output is re-read with its known schema, so no inference
+job runs. A
+resumed stage is read with the manifest's schema, so a full resume runs
+only the input fingerprint's job.
 
 On a real cluster the parquet roots live on HDFS/S3 and the same logic
 holds; Iceberg would add snapshot ids to the manifest — parquet + manifest
@@ -33,8 +36,9 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from indian_address_parser_spark.eval.pairwise import pairwise_scores
 from indian_address_parser_spark.operators.blocking import with_block_key
@@ -57,26 +61,23 @@ def _manifest_path(root: str, stage: str) -> str:
     return os.path.join(root, stage, "_manifest.json")
 
 
-# semantic per-stage counters recorded in the manifest (observability /
-# lineage record alongside the per-partition row counts)
+# semantic per-stage counters recorded in the manifest, observed in the
+# stage's write job. Observed metrics admit no DISTINCT aggregate, so the
+# counters are exact non-distinct forms: a cluster is labelled by its min
+# member id and a singleton by its own id, so each cluster has exactly one
+# row with mention_id = cluster_id.
 _STAGE_COUNTERS = {
-    "mentions": lambda: [
-        F.count(F.col("pincode")).alias("with_pincode"),
-        F.count(F.col("city")).alias("with_city"),
-        F.count(F.col("locality")).alias("with_locality"),
-    ],
-    "blocked": lambda: [
-        F.countDistinct("block_key").alias("distinct_blocks"),
-        F.countDistinct("join_key").alias("distinct_join_keys"),
-        F.max("block_size").alias("max_block_size"),
-    ],
-    "edges": lambda: [
-        F.min("score").alias("min_score"),
-        F.avg("score").alias("avg_score"),
-    ],
-    "clusters": lambda: [
-        F.countDistinct("cluster_id").alias("n_clusters"),
-    ],
+    "mentions": (
+        "count(pincode) AS with_pincode",
+        "count(city) AS with_city",
+        "count(locality) AS with_locality",
+    ),
+    "blocked": (
+        "count_if(join_key != block_key) AS split_rows",
+        "max(block_size) AS max_block_size",
+    ),
+    "edges": ("min(score) AS min_score", "avg(score) AS avg_score"),
+    "clusters": ("count_if(mention_id = cluster_id) AS n_clusters",),
 }
 
 
@@ -99,20 +100,27 @@ def _write_stage(
     stage: str,
     input_fp: str,
     iceberg_prefix: str | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, dict]:
     """Write stage output + manifest; return the re-read DataFrame (so the
-    downstream plan reads from storage — cutting lineage like a checkpoint).
+    downstream plan reads from storage — cutting lineage like a
+    checkpoint) and the manifest.
 
-    With ``iceberg_prefix`` (e.g. ``catalog.db``) AND the Iceberg runtime on
-    the classpath, stages land in Iceberg tables and the manifest records
-    the snapshot id (ACID commit + time-travel for resume); otherwise plain
-    parquet. The manifest is written either way — it carries the lineage
-    counters Iceberg's own snapshot summary does not."""
+    The row count and counters are observed in the write job and the
+    output is re-read with the schema already known, so no job runs after
+    the write. With ``iceberg_prefix`` (e.g. ``catalog.db``) AND the
+    Iceberg runtime on the classpath, stages land in Iceberg tables and the
+    manifest records the snapshot id (ACID commit + time-travel for
+    resume); otherwise plain parquet. The manifest is written either way —
+    it carries the lineage counters Iceberg's own snapshot summary does
+    not."""
     spark = df.sparkSession
-    storage: dict = {"format": "parquet"}
+    obs = Observation()
+    observed = df.observe(
+        obs, *[F.expr(e) for e in ("count(*) AS rows", *_STAGE_COUNTERS[stage])]
+    )
     if iceberg_prefix and iceberg_available(spark):  # pragma: no cover - needs jar
         table = f"{iceberg_prefix}.{stage}"
-        df.writeTo(table).using("iceberg").createOrReplace()
+        observed.writeTo(table).using("iceberg").createOrReplace()
         out = spark.read.table(table)
         snap = (
             spark.sql(f"SELECT snapshot_id FROM {table}.snapshots "
@@ -120,54 +128,45 @@ def _write_stage(
         )
         storage = {"format": "iceberg", "table": table,
                    "snapshot_id": snap[0][0] if snap else None}
-        return _finish_manifest(out, root, stage, input_fp, storage)
-    path = os.path.join(root, stage)
-    df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    return _finish_manifest(out, root, stage, input_fp, storage)
-
-
-def _finish_manifest(
-    out: DataFrame, root: str, stage: str, input_fp: str, storage: dict
-) -> DataFrame:
-    per_part = (
-        out.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-    )
-    counters = {}
-    agg_exprs = _STAGE_COUNTERS.get(stage)
-    if agg_exprs:
-        row = out.agg(*agg_exprs()).collect()[0]
-        counters = {k: (v if not hasattr(v, "item") else v.item()) for k, v in row.asDict().items()}
+    else:
+        path = os.path.join(root, stage)
+        observed.write.mode("overwrite").parquet(path)
+        out = spark.read.schema(df.schema).parquet(path)
+        storage = {"format": "parquet"}
+    counters = dict(obs.get)
     manifest = {
         "stage": stage,
         "version": STAGE_VERSIONS[stage],
         "input_fingerprint": input_fp,
-        "rows": sum(r["count"] for r in per_part),
-        "partitions": {str(r["pid"]): r["count"] for r in per_part},
+        "rows": counters.pop("rows"),
         "counters": counters,
+        "schema": out.schema.jsonValue(),
         "storage": storage,
         "written_at": time.time(),
     }
     os.makedirs(os.path.join(root, stage), exist_ok=True)
     with open(_manifest_path(root, stage), "w") as f:
         json.dump(manifest, f)
-    return out
+    return out, manifest
 
 
-def _stage_valid(root: str, stage: str, input_fp: str) -> bool:
+def _valid_manifest(root: str, stage: str, input_fp: str) -> dict | None:
+    """→ the stage's manifest when the stage can be resumed, else None."""
     mp = _manifest_path(root, stage)
     if not os.path.exists(mp):
-        return False
+        return None
     try:
         with open(mp) as f:
             manifest = json.load(f)
     except (OSError, json.JSONDecodeError):
-        return False
-    return (
+        return None
+    valid = (
         manifest.get("stage") == stage
         and manifest.get("version", 1) == STAGE_VERSIONS[stage]
         and manifest.get("input_fingerprint") == input_fp
+        and "schema" in manifest
     )
+    return manifest if valid else None
 
 
 def _input_fingerprint(pages: DataFrame) -> str:
@@ -197,21 +196,18 @@ def run_pipeline(
     report: dict = {"input_fingerprint": fp, "stages": {}, "resumed": []}
 
     def stage(name: str, build):
-        path = os.path.join(work_dir, name)
-        if resume and _stage_valid(work_dir, name, fp):
+        manifest = _valid_manifest(work_dir, name, fp) if resume else None
+        if manifest is not None:
             report["resumed"].append(name)
-            with open(_manifest_path(work_dir, name)) as f:
-                manifest = json.load(f)
             report["stages"][name] = manifest
             storage = manifest.get("storage", {})
             if storage.get("format") == "iceberg":  # pragma: no cover - needs jar
                 return spark.read.table(storage["table"])
-            return spark.read.parquet(path)
+            schema = StructType.fromJson(manifest["schema"])
+            return spark.read.schema(schema).parquet(os.path.join(work_dir, name))
         t0 = time.perf_counter()
-        out = _write_stage(build(), work_dir, name, fp, iceberg_prefix)
-        with open(_manifest_path(work_dir, name)) as f:
-            report["stages"][name] = json.load(f)
-        report["stages"][name]["seconds"] = time.perf_counter() - t0
+        out, manifest = _write_stage(build(), work_dir, name, fp, iceberg_prefix)
+        report["stages"][name] = {**manifest, "seconds": time.perf_counter() - t0}
         return out
 
     mentions = stage("mentions", lambda: extract_mentions(pages))

@@ -186,14 +186,195 @@ class TestPipeline:
             )
             assert stray.isEmpty(), stray.limit(5).collect()
 
-    def test_manifests_record_partitions(self, spark, fixture, tmp_path):
+    def test_manifests_match_written_stages(self, spark, fixture, tmp_path):
+        """The row count and counters observed in each stage's write job
+        equal direct aggregates over the written parquet, and the recorded
+        schema is the one Spark infers from it."""
+        from pyspark.sql.types import StructType
+
         wd = str(tmp_path / "manifest")
-        run_pipeline(spark, fixture["pages"], wd)
-        for stage in ("mentions", "blocked", "edges", "clusters"):
+        # a small cap so some blocks are split and split_rows is not 0
+        run_pipeline(spark, fixture["pages"], wd, max_block_size=10)
+        direct = {
+            "mentions": [
+                F.count("pincode").alias("with_pincode"),
+                F.count("city").alias("with_city"),
+                F.count("locality").alias("with_locality"),
+            ],
+            "blocked": [
+                F.count_if(F.col("join_key") != F.col("block_key")).alias("split_rows"),
+                F.max("block_size").alias("max_block_size"),
+            ],
+            "edges": [F.min("score").alias("min_score"), F.avg("score").alias("avg_score")],
+            "clusters": [F.countDistinct("cluster_id").alias("n_clusters")],
+        }
+        for stage, aggs in direct.items():
             with open(os.path.join(wd, stage, "_manifest.json")) as f:
                 m = json.load(f)
-            assert m["rows"] == sum(m["partitions"].values())
-            assert m["rows"] > 0
+            written = spark.read.parquet(os.path.join(wd, stage))
+            assert StructType.fromJson(m["schema"]) == written.schema, stage
+            want = written.agg(F.count("*").alias("rows"), *aggs).first().asDict()
+            assert m["rows"] == want.pop("rows") > 0, stage
+            assert m["counters"] == pytest.approx(want, rel=1e-12), stage
+            if stage == "blocked":
+                assert m["counters"]["split_rows"] > 0
+
+    def test_resume_recomputes_stage_without_schema(self, spark, fixture, tmp_path):
+        """A manifest that records no schema (written before schemas were
+        recorded) does not validate: that stage alone is recomputed, its new
+        manifest records the schema, and the clusters are unchanged."""
+        from indian_address_parser_spark.plans.er_pipeline import STAGES
+
+        wd = str(tmp_path / "no_schema")
+        run_pipeline(spark, fixture["pages"], wd)
+
+        def clusters():
+            rows = spark.read.parquet(os.path.join(wd, "clusters")).select(
+                "mention_id", "cluster_id"
+            )
+            return sorted(map(tuple, rows.collect()))
+
+        want = clusters()
+        for stage in STAGES:
+            mp = os.path.join(wd, stage, "_manifest.json")
+            with open(mp) as f:
+                manifest = json.load(f)
+            del manifest["schema"]
+            with open(mp, "w") as f:
+                json.dump(manifest, f)
+            report = run_pipeline(spark, fixture["pages"], wd)
+            assert report["resumed"] == [s for s in STAGES if s != stage]
+            with open(mp) as f:
+                assert "schema" in json.load(f)
+            assert clusters() == want, stage
+
+    def test_job_counts(self, spark, fixture, tmp_path):
+        """A fresh call runs each stage's write job and nothing else — no
+        manifest aggregate, no schema inference; a full resume runs only
+        the input fingerprint's jobs."""
+        from indian_address_parser_spark.plans.er_pipeline import _input_fingerprint
+
+        sc = spark.sparkContext
+        wd = str(tmp_path / "jobs")
+
+        def jobs(group, call):
+            sc.setJobGroup(group, group)
+            try:
+                call()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        pages = fixture["pages"]
+        fingerprint = jobs("test_job_counts.fp", lambda: _input_fingerprint(pages))
+        # 12 on this fixture: the fingerprint's 2, then one job per shuffle
+        # stage of the four stage writes (AQE submits each on its own)
+        fresh = jobs("test_job_counts.fresh", lambda: run_pipeline(spark, pages, wd))
+        assert fresh <= 12, fresh
+        resumed = jobs("test_job_counts.resume", lambda: run_pipeline(spark, pages, wd))
+        assert resumed == fingerprint == 2
+
+
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+class TestScoringFormula:
+    def test_scores_match_python_reference(self, spark, fixture, monkeypatch):
+        """Every candidate pair's score, before the threshold and before
+        rounding, equals a pure-Python evaluation of ``FIELD_WEIGHTS``:
+        Jaro-Winkler or Levenshtein similarity per field, 0 when a digit
+        guard fails, and the weights renormalized over the fields present
+        on both sides."""
+        from indian_address_parser_spark.core.fuzzy import jaro_winkler
+        from indian_address_parser_spark.operators import scoring
+
+        monkeypatch.setattr(
+            scoring,
+            "_edges",
+            lambda scored, threshold, key: scored.selectExpr(
+                "mention_id_a AS src", "mention_id_b AS dst", "score"
+            ),
+        )
+        pairs = candidate_pairs(with_block_key(extract_mentions(fixture["pages"])))
+        # threshold 0 also turns off the house-number prune: every pair scores
+        scored = scoring.score_pairs(pairs, threshold=0.0)
+        # a bare 1.0 in Spark SQL is a DECIMAL literal: none may reach the
+        # plan, or the weights sum in decimal arithmetic
+        analyzed = scored._jdf.queryExecution().analyzed().toJSON()
+        assert '"dataType":"decimal' not in analyzed
+        got = {(r["src"], r["dst"]): r["score"] for r in scored.collect()}
+
+        def reference(row):
+            num = den = 0.0
+            for f, w, guarded, use_jw in scoring.FIELD_WEIGHTS:
+                a, b = row[f"{f}_a"], row[f"{f}_b"]
+                if a is None or b is None:
+                    continue
+                den += w
+                if guarded and row[f"{f}_digits_a"] != row[f"{f}_digits_b"]:
+                    continue
+                if use_jw:
+                    sim = jaro_winkler(a, b)
+                else:
+                    ml = max(len(a), len(b))
+                    sim = 1.0 if ml == 0 else 1.0 - _levenshtein(a, b) / ml
+                num += sim * w
+            return num / den if den > 0 else 0.0
+
+        want = {(r["mention_id_a"], r["mention_id_b"]): reference(r) for r in pairs.collect()}
+        assert len(want) > 1000
+        assert got.keys() == want.keys()
+        for k, v in want.items():
+            assert got[k] == pytest.approx(v, abs=1e-12, rel=0), k
+
+
+class TestBlockKey:
+    def test_keys_match_python_reference(self, spark):
+        """The block key is pincode | city | soundex(locality letters), with
+        the city read from the normalized text (whole words NEW DELHI, then
+        DELHI) when the tagger found none; an oversized block joins on the
+        key plus soundex(street letters) | house-number digits."""
+        from indian_address_parser_spark.core.fuzzy import soundex
+
+        cols = (
+            "mention_id string, normalized string, pincode string, city string, "
+            "locality string, street string, house_no string, block string, "
+            "sector string, khasra string"
+        )
+        rows = [
+            ("a", "H NO 4, LAJPAT NAGAR, NEW DELHI", "110024", None, "LAJPAT NAGAR",
+             "GALI NO 4", "H.NO 45/2", None, None, None),
+            ("b", "RAJ NAGAR, DELHI-110041", "110041", None, "RAJ NAGAR", None, None,
+             "B-7", None, None),
+            ("c", "NEWDELHI NAGAR", None, None, "123", "4", "12", None, None, None),
+            ("d", "SECTOR 5, DELHI ROAD", None, "GURGAON", None, None, None, None,
+             "5", "KH 9"),
+        ]
+        df = spark.createDataFrame(rows, cols)
+        got = {
+            r["mention_id"]: r
+            for r in with_block_key(df, max_block_size=0).collect()
+        }
+        city = {"a": "NEW DELHI", "b": "DELHI", "c": "", "d": "GURGAON"}
+
+        def sx(text):
+            letters = "".join(ch for ch in text or "" if ch.isascii() and ch.isalpha())
+            return soundex(letters) if letters else ""
+
+        for m, _, pincode, _, locality, street, house_no, *_ in rows:
+            key = f"{pincode or ''}|{city[m]}|{sx(locality)}"
+            digits = "".join(ch for ch in house_no or "" if ch.isdigit() or ch == "/")
+            assert got[m]["block_key"] == key, m
+            assert got[m]["join_key"] == f"{key}||{sx(street)}|{digits}", m
+        assert got["d"]["sector_digits"] == "5" and got["d"]["khasra_digits"] == "9"
+        assert got["a"]["block_digits"] is None and got["b"]["block_digits"] == "7"
 
 
 class TestSkewHandling:

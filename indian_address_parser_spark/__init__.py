@@ -18,4 +18,12 @@ plans/      SparkSession builder and the end-to-end checkpointed pipeline.
 eval/       pairwise-F1 evaluator for cluster quality.
 """
 
+from indian_address_parser_spark import _zipstamp
+
 __version__ = "0.1.0"
+
+# The engine's Python UDFs (extraction, JW scoring, union-find, ...) live in
+# this package, so a Spark Python worker runs this in its first task; from
+# its next task on, per-task import-cache invalidation stops re-reading
+# pyspark.zip and the spark-core jar (see _zipstamp).
+_zipstamp.install()

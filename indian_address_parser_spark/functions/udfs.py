@@ -4,6 +4,13 @@ All Python execution in the pipeline goes through these — never row-at-a-time
 ``F.udf``. The core modules compile their regex tables at import, which under
 ``spark.python.worker.reuse`` (default true) happens once per Python worker,
 mirroring the reference API's load-once lifespan (``api/main.py:39-62``).
+
+Worker reuse keeps module state (imported modules, compiled tables) from one
+task to the next, but PySpark still calls ``importlib.invalidate_caches()``
+at the start of every task. On CPython < 3.12 that re-parsed every zip
+archive on the worker's path (pyspark.zip, the py4j zip, the spark-core jar:
+0.17-0.27 s a task); importing this package installs a stat guard that
+skips the re-read while an archive is unchanged (``_zipstamp``).
 """
 
 from __future__ import annotations

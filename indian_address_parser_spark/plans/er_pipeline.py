@@ -36,6 +36,7 @@ import json
 import os
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -90,7 +91,7 @@ def iceberg_available(spark: SparkSession) -> bool:
             "org.apache.iceberg.spark.SparkCatalog"
         )
         return True
-    except Exception:
+    except Py4JJavaError:  # java.lang.ClassNotFoundException
         return False
 
 

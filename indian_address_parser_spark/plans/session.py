@@ -27,7 +27,10 @@ def _warm_python_workers(spark) -> None:
     argument (and probe shape) as bench.py's ``warm_python_workers``,
     which runs too late for the query loop's first pandas-UDF queries
     (measured: the first UDF query paid ~4-5 s of worker spawn at any
-    scale factor)."""
+    scale factor). The probe imports the package, so it also installs the
+    zip-importer stat guard (``_zipstamp``) in every worker it touches:
+    from their next task on, the per-task import-cache invalidation no
+    longer re-reads pyspark.zip and the spark-core jar."""
     from pyspark.sql import types as T
 
     cores = spark.sparkContext.defaultParallelism
@@ -77,6 +80,11 @@ def _warm_python_workers(spark) -> None:
     ).count()
 
 
+def _default_heap() -> str:
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")  # MemTotal
+    return f"{min(ram // 4, 32 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "indian_address_parser_spark",
     master: str | None = None,
@@ -85,7 +93,7 @@ def get_spark(
     prefer_tmpfs_scratch: bool = False,
     warm_workers: bool | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = cpus if cpus.isdigit() else os.cpu_count() or 8
@@ -107,12 +115,11 @@ def get_spark(
         # 20% faster extraction at 16 cores vs the 4096 default
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode = driver only. Heap size is a measured trade-off: 24g
-        # was GC-bound on the wide pair join at 16 threads (round 1), while
-        # 64g made 32-thread python extraction ~27% SLOWER than 32g (G1
-        # region/footprint effects at high worker counts). 32g is the
-        # sweet spot on this 128 GiB box.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        # local mode = driver only: a quarter of physical RAM, capped at
+        # 32g. On a 128 GiB, 32-core box 24g was GC-bound on the wide pair
+        # join at 16 threads, while 64g made 32-thread Python extraction
+        # ~27% slower than 32g (G1 region/footprint effects).
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_heap()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # ContextCleaner only unpersists orphaned checkpoint/broadcast

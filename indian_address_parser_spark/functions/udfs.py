@@ -164,13 +164,6 @@ def normalize_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda s: preprocess(s) if s is not None else None)
 
 
-@F.pandas_udf(T.StringType())
-def digit_signature_udf(text: pd.Series) -> pd.Series:
-    from indian_address_parser_spark.core.fuzzy import digit_signature
-
-    return text.map(lambda s: digit_signature(s) if s is not None else None)
-
-
 def make_topcells_udf(bc_centroids, nprobe: int):
     """Factory: (v: array<double>) → the ``nprobe`` best IVF cells ordered
     by (dot DESC, cell ASC). ``bc_centroids`` is a Spark broadcast of the

@@ -52,6 +52,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Past this symmetrized node degree a round (and the label step) leaves the
+# window formulation for groupBy+join stars; see connected_components.
+_GIANT_DEGREE = 1_000_000
+# The hash-collision audit runs once the graph may hold this many nodes.
+_AUDIT_MIN_NODES = 100_000_000
+# Star rounds before the loop stops unconverged (O(log n) expected).
+_MAX_ITER = 25
+
 
 def _union_find_labels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """``mapInPandas`` body: every edge of one partition → one
@@ -165,9 +173,10 @@ def _star_round_window(edges: DataFrame) -> DataFrame:
     formulation gets map-side partial aggregation and AQE skew-join splits.
     In star-contracted graphs a root's degree approaches its component size,
     so this path assumes bounded components (here: households — mentions of
-    one postal address). For unbounded component sizes (spam clusters,
-    boilerplate pages at crawl scale) pass ``stars="join"`` to
-    :func:`connected_components`.
+    one postal address). Unbounded component sizes (spam clusters,
+    boilerplate pages at crawl scale) push :func:`connected_components`
+    onto the join formulation once a node's degree reaches
+    ``_GIANT_DEGREE``.
     """
     from pyspark.sql import Window
 
@@ -232,12 +241,7 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    stars: str = "auto",
-    giant_degree_threshold: int = 1_000_000,
-    on_hash_collision: str = "fallback",
-    audit_min_nodes: int = 100_000_000,
     _strategy_log: list | None = None,
     _explain_log: list | None = None,
 ) -> DataFrame:
@@ -253,48 +257,43 @@ def connected_components(
     is identical to a string-keyed run. A hash collision (≈ n²/2⁶⁵ pairs;
     ~2.7·10⁴ expected at 10¹² mentions) could only ever merge two clusters,
     never split one — still a wrong answer at the scale where it becomes
-    likely, so past ``audit_min_nodes`` the hash space is AUDITED at
+    likely, so past ``_AUDIT_MIN_NODES`` the hash space is AUDITED at
     runtime: one agg over the (then checkpointed) node dimension compares
-    ``count(mention_id)`` to ``count(distinct hid)``. On mismatch,
-    ``on_hash_collision`` picks the reaction: ``"fallback"`` (default)
-    reruns the loop on the raw string keys — correct at ~6× shuffle
-    bytes — and ``"error"`` raises so a pipeline owner can pick a wider
-    key (e.g. concat of two seeded hashes) instead.
+    ``count(mention_id)`` to ``count(distinct hid)``. On mismatch the loop
+    reruns on the raw string keys — correct at ~6× shuffle bytes.
 
-    ``audit_min_nodes`` gates the audit on graph size (the node-count
+    ``_AUDIT_MIN_NODES`` gates the audit on graph size (the node-count
     upper bound 2 × edge-count, known for free from the convergence
-    fingerprint). Below the default gate of 10⁸ nodes the collision
-    probability is ≤ (10⁸)²/2⁶⁵ ≈ 2.7·10⁻⁴ — the audit would cost two
+    fingerprint). Below the gate of 10⁸ nodes the collision probability
+    is ≤ (10⁸)²/2⁶⁵ ≈ 2.7·10⁻⁴ — the audit would cost two
     extra jobs (a distinct + checkpoint over every node id and a
     count-distinct shuffle) to rule out a once-in-4000-runs event, a
     measured −8% scaling-efficiency tax on the 8-core link stage at 4.8M
     pages. Past the gate the same two jobs are noise next to the star
     loop itself and the probability is no longer ignorable (expected
     collisions reach 0.5 at n ≈ 4.3·10⁹ and ~2.7·10⁴ at 10¹²), so the
-    audit always runs. Set to 0 to force the audit on any input (the
-    collision tests do).
+    audit always runs. The collision tests set it to 0 to force the audit.
 
-    ``stars`` picks the per-round physical strategy: ``"window"`` (2
-    exchanges/round, assumes bounded component sizes), ``"join"``
-    (groupBy+join stars: partial aggregation + AQE-skew-splittable, for
-    graphs that may contain giant components), or ``"auto"`` (default):
-    each round uses the window formulation while the previous round's
-    maximum symmetrized node degree — measured for free inside the convergence
-    fingerprint — stays below ``giant_degree_threshold``, and the join
-    formulation above it. Star contraction makes a giant component's root
-    degree approach its component size within a round or two, so the
-    per-round re-check catches mega-clusters (crawl spam/boilerplate) that
-    a one-shot input-degree test would miss. All strategies produce
+    Each round picks its physical strategy: the window formulation (2
+    exchanges/round, assumes bounded component sizes) while the previous
+    round's maximum symmetrized node degree — measured for free inside
+    the convergence fingerprint — stays below ``_GIANT_DEGREE``, and
+    groupBy+join stars (partial aggregation + AQE-skew-splittable) at or
+    past it. Star contraction makes a giant component's root degree
+    approach its component size within a round or two, so the per-round
+    re-check catches mega-clusters (crawl spam/boilerplate) that a
+    one-shot input-degree test would miss. Both strategies produce
     identical edge sets after each round — see :func:`_star_round_window`.
+    The loop stops after ``_MAX_ITER`` rounds if it has not converged.
 
     The FINAL label step follows the same posture: while the converged
     graph's maximum degree (≈ its maximum component size — star
-    contraction pulls every member adjacent to the root) stays below the
-    giant threshold, labels come from one min-over-root window (a single
-    exchange); at or past it — or under ``stars="join"`` — labeling
-    switches to a groupBy partial-agg + join back, which combines
-    map-side and stays AQE-skew-splittable where a window partition
-    would funnel the whole giant component onto one task.
+    contraction pulls every member adjacent to the root) stays below
+    ``_GIANT_DEGREE``, labels come from one min-over-root window (a single
+    exchange); at or past it labeling switches to a groupBy partial-agg +
+    join back, which combines map-side and stays AQE-skew-splittable where
+    a window partition would funnel the whole giant component onto one
+    task.
 
     ``_strategy_log`` (tests/debugging): a list that receives the strategy
     chosen each round. ``_explain_log``: a list that receives the label
@@ -383,18 +382,12 @@ def connected_components(
         # gate itself costs nothing. When it fires, the node dimension is
         # checkpointed (audit + label join = two consumers) and one agg
         # compares id count to distinct-hash count.
-        if 2 * n >= audit_min_nodes:
+        if 2 * n >= _AUDIT_MIN_NODES:
             nodes = _truncate(nodes)
             audit = nodes.agg(
                 F.count("*").alias("n"), F.countDistinct("hid").alias("d")
             ).collect()[0]
             if int(audit["n"]) != int(audit["d"]):
-                if on_hash_collision == "error":
-                    raise RuntimeError(
-                        f"xxhash64 collision in CC node ids: {audit['n']} ids -> "
-                        f"{audit['d']} hashes; rerun with on_hash_collision='fallback' "
-                        "or widen the loop key"
-                    )
                 # String keys: lexicographic order is a total order too, and
                 # the converged root IS min(mention_id), so the label step
                 # below works unchanged (hid == mention_id == root
@@ -409,11 +402,8 @@ def connected_components(
         def _step_join(e: DataFrame) -> DataFrame:
             return _small_star(_large_star(e))
 
-        for _ in range(max_iter):
-            if stars == "auto":
-                use_window = max_deg < giant_degree_threshold
-            else:
-                use_window = stars == "window"
+        for _ in range(_MAX_ITER):
+            use_window = max_deg < _GIANT_DEGREE
             if _strategy_log is not None:
                 _strategy_log.append("window" if use_window else "join")
             step = _star_round_window if use_window else _step_join
@@ -439,11 +429,7 @@ def connected_components(
         members = cur.select(F.col("u").alias("hid"), F.col("v").alias("root"))
         roots = cur.select(F.col("v").alias("hid")).distinct().withColumn("root", F.col("hid"))
         assignments_h = members.union(roots).distinct()
-        window_label = (
-            stars == "window"
-            or (stars == "auto" and max_deg < giant_degree_threshold)
-        )
-        if window_label:
+        if max_deg < _GIANT_DEGREE:
             from pyspark.sql import Window
 
             named = assignments_h.join(nodes, "hid").select("mention_id", "root")

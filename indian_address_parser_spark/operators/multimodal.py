@@ -1,20 +1,15 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Web-crawl tables carry binary columns (here: ``pages.html``; the same shape
-covers image/audio/video payloads). The Spark-side plumbing — schema,
-partition sizing, Arrow batch shape, UDF signatures — is real and tested.
-PNG (zlib inflate + scanline unfilter, :func:`decode_png`), GIF (variable-
-width LZW + palette + deinterlace, :func:`decode_gif`), WAV (RIFF walk,
-:func:`decode_wav`) and MP3 metadata (ID3 skip + frame-header walk,
-:func:`decode_mp3`) decode for REAL in pure stdlib; baseline JPEG (SOF0)
-decodes for REAL too — marker walk, Huffman entropy decode, dequantize,
-numpy 8×8 IDCT, chroma upsample, YCbCr→RGB (:func:`decode_jpeg`).
-WebM/Matroska video metadata decodes via an EBML walk
-(:func:`decode_webm`), and :func:`resize_images` thumbnails through a
-vectorized numpy kernel + stdlib PNG encoder. Progressive JPEG, MP4, and
-actual video-codec frame decode are the remaining honest gaps, raising
-``NotImplementedError`` through ``DECODERS`` so a libjpeg/libvpx-backed
-decoder drops in per modality without touching the plan.
+covers image/audio/video payloads). :func:`binary_metadata` sniffs modality
+and format from magic bytes; :func:`decode_features` runs the per-modality
+metadata decoders in ``DECODERS``, all pure stdlib: PNG (IHDR for metadata,
+full inflate + scanline unfilter in :func:`decode_png`), JPEG frame-header
+dimensions (any SOF variant), WAV (RIFF walk, :func:`decode_wav`), MP3 (ID3
+skip + frame-header walk, :func:`decode_mp3`) and WebM/Matroska (EBML walk,
+:func:`decode_webm`). Formats without a decoder (GIF, MP4) raise
+``NotImplementedError`` and surface as ``decode_error`` rows, so a decoder
+drops in per format without touching the plan.
 
 Design for 100 TB: binary columns dominate bytes, so every operator here
 (a) prunes to exactly (key, binary) before the UDF, (b) uses
@@ -24,13 +19,13 @@ payloads can be dropped), and (c) bounds Python memory via
 never materializing a partition at once.
 """
 
+
 from __future__ import annotations
 
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 META_SCHEMA = T.StructType(
@@ -174,532 +169,6 @@ def decode_png(payload: bytes) -> dict:
     return {"width": w, "height": h, "channels": channels, "pixels": bytes(out)}
 
 
-def _gif_subblocks(payload: bytes, pos: int) -> tuple[bytes, int]:
-    """Concatenate a GIF sub-block sequence starting at ``pos`` → (data,
-    position after the 0x00 terminator)."""
-    out = bytearray()
-    while True:
-        if pos >= len(payload):
-            raise ValueError("truncated sub-block sequence")
-        n = payload[pos]
-        pos += 1
-        if n == 0:
-            return bytes(out), pos
-        if pos + n > len(payload):
-            raise ValueError("truncated sub-block")
-        out += payload[pos : pos + n]
-        pos += n
-
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, max_pixels: int) -> bytearray:
-    """REAL GIF LZW decode (variable-width codes, clear/EOI handling).
-
-    Pure stdlib; output bounded by ``max_pixels`` so a crafted stream
-    cannot balloon past the descriptor-claimed frame size."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-
-    def reset():
-        return (
-            {i: bytes([i]) for i in range(clear)},
-            min_code_size + 1,
-            eoi + 1,
-        )
-
-    table, width, next_code = reset()
-    prev: bytes | None = None
-    acc = nbits = 0
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nbits -= width
-            if code == clear:
-                table, width, next_code = reset()
-                prev = None
-                continue
-            if code == eoi:
-                return out
-            if prev is None:
-                if code not in table:
-                    raise ValueError(f"first code {code} after clear not literal")
-                entry = table[code]
-            elif code in table:
-                entry = table[code]
-            elif code == next_code:  # the KwKwK case
-                entry = prev + prev[:1]
-            else:
-                raise ValueError(f"LZW code {code} out of range")
-            out += entry
-            if len(out) > max_pixels:
-                raise ValueError("LZW stream exceeds frame size (bomb?)")
-            if prev is not None and next_code < 4096:
-                table[next_code] = prev + entry[:1]
-                next_code += 1
-                if next_code == (1 << width) and width < 12:
-                    width += 1
-            prev = entry
-    return out
-
-
-# 64 MP cap, same rationale as _PNG_MAX_PIXELS
-_GIF_MAX_PIXELS = 64_000_000
-
-
-def _gif_frame_records(payload: bytes) -> list[dict]:
-    """Walk the GIF block stream → one record per image frame (descriptor
-    + effective palette + raw LZW data), extensions skipped. Shared by
-    :func:`decode_gif` (first frame + count) and :func:`sample_frames`
-    (every-N-th frame)."""
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    if len(payload) < 13:
-        raise ValueError("truncated logical screen descriptor")
-    _sw, _sh, flags, _bg, _aspect = struct.unpack("<HHBBB", payload[6:13])
-    pos = 13
-    global_palette = None
-    if flags & 0x80:
-        n = 3 * (2 << (flags & 0x07))
-        global_palette = payload[pos : pos + n]
-        pos += n
-    records: list[dict] = []
-    while pos < len(payload):
-        block = payload[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            _, pos = _gif_subblocks(payload, pos)
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-        if pos + 9 > len(payload):
-            raise ValueError("truncated image descriptor")
-        _left, _top, w, h, iflags = struct.unpack("<HHHHB", payload[pos : pos + 9])
-        pos += 9
-        palette = global_palette
-        if iflags & 0x80:
-            n = 3 * (2 << (iflags & 0x07))
-            palette = payload[pos : pos + n]
-            pos += n
-        if pos >= len(payload):
-            raise ValueError("truncated LZW header")
-        min_code_size = payload[pos]
-        pos += 1
-        data, pos = _gif_subblocks(payload, pos)
-        records.append(
-            {
-                "w": w,
-                "h": h,
-                "iflags": iflags,
-                "palette": palette,
-                "min_code_size": min_code_size,
-                "data": data,
-            }
-        )
-    return records
-
-
-def _gif_decode_frame(rec: dict) -> dict:
-    """LZW-decode one frame record → width/height/channels=3 + RGB bytes
-    (deinterlaced if flagged). Transparency (GCE bit) is ignored —
-    metadata/sampling, not compositing."""
-    w, h = rec["w"], rec["h"]
-    if not w or not h:
-        raise ValueError("zero-sized frame")
-    if w * h > _GIF_MAX_PIXELS:
-        raise ValueError(f"frame claims {w}x{h} pixels (cap {_GIF_MAX_PIXELS})")
-    palette = rec["palette"]
-    if palette is None:
-        raise ValueError("no color table for frame")
-    min_code_size = rec["min_code_size"]
-    if not (2 <= min_code_size <= 11):
-        raise ValueError(f"bad LZW minimum code size {min_code_size}")
-    idx = _gif_lzw_decode(rec["data"], min_code_size, w * h)
-    if len(idx) < w * h:
-        raise ValueError(f"frame has {len(idx)} pixels, expected {w * h}")
-    idx = idx[: w * h]
-    if rec["iflags"] & 0x40:  # deinterlace (4-pass row shuffle)
-        rows = [idx[r * w : (r + 1) * w] for r in range(h)]
-        order = (
-            list(range(0, h, 8))
-            + list(range(4, h, 8))
-            + list(range(2, h, 4))
-            + list(range(1, h, 2))
-        )
-        shuffled = [b""] * h
-        for src_row, dst_row in zip(rows, order):
-            shuffled[dst_row] = src_row
-        idx = bytearray(b"".join(shuffled))
-    n_colors = len(palette) // 3
-    pixels = bytearray(w * h * 3)
-    for i, ci in enumerate(idx):
-        if ci >= n_colors:
-            raise ValueError(f"palette index {ci} out of range")
-        pixels[3 * i : 3 * i + 3] = palette[3 * ci : 3 * ci + 3]
-    return {"width": w, "height": h, "channels": 3, "pixels": bytes(pixels)}
-
-
-def decode_gif(payload: bytes) -> dict:
-    """REAL pure-stdlib GIF decode: header + logical screen descriptor →
-    block walk (extensions skipped, frames counted) → first frame LZW
-    decode → palette mapping → RGB ``pixels`` (deinterlaced if needed).
-
-    Returns width/height (of the FIRST frame), channels=3, ``n_frames``
-    across the whole stream, and the first frame's raw RGB bytes.
-    Transparency (GCE bit) is ignored — metadata extraction, not
-    compositing; a production pipeline drops PIL into ``DECODERS``."""
-    records = _gif_frame_records(payload)
-    if not records:
-        raise ValueError("GIF contains no image frame")
-    first = _gif_decode_frame(records[0])
-    first["n_frames"] = len(records)
-    return first
-
-
-# ---------------------------------------------------------------------------
-# Baseline JPEG (ITU-T T.81 / ISO 10918-1, SOF0 sequential DCT, Huffman)
-# ---------------------------------------------------------------------------
-
-_JPEG_MAX_PIXELS = 64_000_000  # same untrusted-crawl rationale as PNG/GIF
-
-# zigzag position k → natural (row-major) coefficient index; generated from
-# the T.81 Figure 5 anti-diagonal walk rather than hand-typed
-def _jpeg_zigzag() -> tuple[int, ...]:
-    order, x, y = [], 0, 0
-    for _ in range(64):
-        order.append(y * 8 + x)
-        if (x + y) % 2 == 0:  # up-right
-            if x == 7:
-                y += 1
-            elif y == 0:
-                x += 1
-            else:
-                x, y = x + 1, y - 1
-        else:  # down-left
-            if y == 7:
-                x += 1
-            elif x == 0:
-                y += 1
-            else:
-                x, y = x - 1, y + 1
-    return tuple(order)
-
-
-_JPEG_ZIGZAG = _jpeg_zigzag()
-
-_JPEG_SOF_UNSUPPORTED = {
-    0xC2: "progressive (SOF2)",
-    0xC3: "lossless (SOF3)",
-    0xC5: "differential sequential (SOF5)",
-    0xC6: "differential progressive (SOF6)",
-    0xC7: "differential lossless (SOF7)",
-    0xC9: "arithmetic sequential (SOF9)",
-    0xCA: "arithmetic progressive (SOF10)",
-    0xCB: "arithmetic lossless (SOF11)",
-    0xCD: "differential arithmetic sequential (SOF13)",
-    0xCE: "differential arithmetic progressive (SOF14)",
-    0xCF: "differential arithmetic lossless (SOF15)",
-}
-
-
-def _jpeg_build_huffman(counts: list[int], symbols: bytes) -> dict:
-    """Canonical Huffman table from a DHT (BITS, HUFFVAL) pair →
-    {(code_length, code): symbol} (T.81 Annex C code assignment)."""
-    table, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            if k >= len(symbols):
-                raise ValueError("DHT symbol count mismatch")
-            table[(length, code)] = symbols[k]
-            k += 1
-            code += 1
-        code <<= 1
-    return table
-
-
-class _JpegBits:
-    """MSB-first bit reader over an (already de-stuffed) entropy segment."""
-
-    __slots__ = ("data", "pos", "acc", "n")
-
-    def __init__(self, data: bytes):
-        self.data, self.pos, self.acc, self.n = data, 0, 0, 0
-
-    def bits(self, k: int) -> int:
-        while self.n < k:
-            if self.pos >= len(self.data):
-                raise ValueError("JPEG entropy stream exhausted mid-block")
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= k
-        return (self.acc >> self.n) & ((1 << k) - 1)
-
-
-def _jpeg_huff_decode(br: _JpegBits, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.bits(1)
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG Huffman code")
-
-
-def _jpeg_extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map the s-bit magnitude code to its signed value."""
-    return v - (1 << s) + 1 if v < (1 << (s - 1)) else v
-
-
-def _jpeg_entropy_segments(payload: bytes, pos: int) -> list[bytes]:
-    """Split the scan's entropy-coded bytes into restart segments,
-    un-stuffing 0xFF00 → 0xFF; stops at the first real marker (EOI/next)."""
-    segments, cur = [], bytearray()
-    n = len(payload)
-    while pos < n:
-        b = payload[pos]
-        if b == 0xFF:
-            m = payload[pos + 1] if pos + 1 < n else 0xD9
-            if m == 0x00:  # stuffed data byte
-                cur.append(0xFF)
-                pos += 2
-                continue
-            if 0xD0 <= m <= 0xD7:  # RSTn: segment boundary
-                segments.append(bytes(cur))
-                cur = bytearray()
-                pos += 2
-                continue
-            if m == 0xFF:  # spec-legal fill byte before a marker (ADVICE
-                pos += 1  # r5): re-examine at the next byte, don't truncate
-                continue
-            break  # EOI or another marker ends the scan
-        cur.append(b)
-        pos += 1
-    segments.append(bytes(cur))
-    return segments
-
-
-def decode_jpeg(payload: bytes) -> dict:
-    """REAL baseline JPEG decode — no libjpeg/PIL, just stdlib + numpy.
-
-    Marker walk (DQT/DHT/SOF0/DRI/SOS) → byte-unstuffed Huffman entropy
-    decode per MCU (DC predictor + AC run-length, T.81 F.2) → dequantize →
-    inverse zigzag → 8×8 IDCT as one numpy ``C.T @ F @ C`` per block →
-    nearest-neighbor chroma upsample → YCbCr→RGB. Handles interleaved
-    multi-component scans, arbitrary JFIF sampling factors (4:4:4, 4:2:2,
-    4:2:0), restart markers, and 16-bit quantization tables.
-
-    Scope: baseline/extended sequential Huffman (SOF0/SOF1), 8-bit
-    precision, single-scan. Progressive (SOF2) and arithmetic-coded
-    variants raise NotImplementedError and surface as ``decode_error``
-    rows. The entropy decode is per-bit Python — fine for thumbnails and
-    metadata extraction; a production image pipeline swaps a libjpeg-backed
-    decoder into ``DECODERS`` (same signature) without touching the plan.
-    """
-    import struct
-
-    import numpy as np
-
-    if payload[:3] != b"\xff\xd8\xff":
-        raise ValueError("not a JPEG (no SOI)")
-    pos = 2
-    qtabs: dict[int, "np.ndarray"] = {}
-    dc_tables: dict[int, dict] = {}
-    ac_tables: dict[int, dict] = {}
-    frame = None
-    scan = None
-    restart_interval = 0
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at byte {pos}")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xFF:  # fill byte
-            pos -= 1
-            continue
-        if marker == 0x01 or 0xD0 <= marker <= 0xD9:  # standalone
-            if marker == 0xD9:
-                break
-            continue
-        if pos + 2 > len(payload):
-            raise ValueError("truncated marker segment")
-        (length,) = struct.unpack(">H", payload[pos : pos + 2])
-        seg = payload[pos + 2 : pos + length]
-        if len(seg) != length - 2:
-            raise ValueError("truncated marker segment")
-        pos += length
-        if marker == 0xDB:  # DQT — one or more tables, 8- or 16-bit entries
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 0x0F
-                i += 1
-                n = 64 * (2 if pq else 1)
-                raw = seg[i : i + n]
-                if len(raw) != n:
-                    raise ValueError("truncated DQT")
-                vals = struct.unpack(">64H" if pq else "64B", raw)
-                qtabs[tq] = np.asarray(vals, dtype=np.float64)  # zigzag order
-                i += n
-        elif marker == 0xC4:  # DHT — one or more tables
-            i = 0
-            while i + 17 <= len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0x0F
-                counts = list(seg[i + 1 : i + 17])
-                n = sum(counts)
-                symbols = seg[i + 17 : i + 17 + n]
-                table = _jpeg_build_huffman(counts, symbols)
-                (dc_tables if tc == 0 else ac_tables)[th] = table
-                i += 17 + n
-        elif marker in (0xC0, 0xC1):  # SOF0 baseline / SOF1 extended seq.
-            precision, h_img, w_img, ncomp = struct.unpack(">BHHB", seg[:6])
-            if precision != 8:
-                raise NotImplementedError(f"JPEG precision {precision} (only 8-bit)")
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
-            frame = {"w": w_img, "h": h_img, "comps": comps}
-        elif marker in _JPEG_SOF_UNSUPPORTED:
-            raise NotImplementedError(f"JPEG {_JPEG_SOF_UNSUPPORTED[marker]}")
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:  # SOS — entropy data follows at `pos`
-            ns = seg[0]
-            scan = []
-            for c in range(ns):
-                cs, tables = seg[1 + 2 * c], seg[2 + 2 * c]
-                scan.append({"id": cs, "dc": tables >> 4, "ac": tables & 0x0F})
-            break
-        # APPn / COM / others: skipped
-    if frame is None or scan is None:
-        raise ValueError("missing SOF/SOS")
-    w_img, h_img, comps = frame["w"], frame["h"], frame["comps"]
-    if not w_img or not h_img:
-        raise ValueError("zero-sized SOF")
-    if w_img * h_img > _JPEG_MAX_PIXELS:
-        raise ValueError(f"SOF claims {w_img}x{h_img} pixels (cap {_JPEG_MAX_PIXELS})")
-    if len(scan) != len(comps):
-        raise NotImplementedError("multi-scan JPEG (non-interleaved scans)")
-    by_id = {c["id"]: c for c in comps}
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    for c in comps:
-        if not c["h"] or not c["v"] or hmax % c["h"] or vmax % c["v"]:
-            raise NotImplementedError(f"non-integer sampling ratio {c['h']}x{c['v']}")
-        if c["tq"] not in qtabs:
-            raise ValueError(f"component references missing DQT {c['tq']}")
-    mcus_x = -(-w_img // (8 * hmax))
-    mcus_y = -(-h_img // (8 * vmax))
-    # orthonormal DCT-II basis: spatial = C.T @ coeffs @ C
-    u = np.arange(8).reshape(8, 1)
-    x = np.arange(8).reshape(1, 8)
-    basis = np.cos((2 * x + 1) * u * np.pi / 16) * np.sqrt(2.0 / 8)
-    basis[0, :] = np.sqrt(1.0 / 8)
-    planes = {
-        c["id"]: np.empty((mcus_y * c["v"] * 8, mcus_x * c["h"] * 8), dtype=np.float64)
-        for c in comps
-    }
-    segments = _jpeg_entropy_segments(payload, pos)
-    seg_i = 0
-    br = _JpegBits(segments[0])
-    preds = {c["id"]: 0 for c in comps}
-    zig = np.asarray(_JPEG_ZIGZAG)  # tuple would be read as a 64-d index
-    zz = np.zeros(64)
-    coeffs = np.zeros(64)
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                seg_i += 1
-                if seg_i >= len(segments):
-                    raise ValueError("missing RST marker (fewer segments than MCUs)")
-                br = _JpegBits(segments[seg_i])
-                preds = {c["id"]: 0 for c in comps}
-            for sc in scan:
-                comp = by_id[sc["id"]]
-                q = qtabs[comp["tq"]]
-                dct = dc_tables.get(sc["dc"])
-                act = ac_tables.get(sc["ac"])
-                if dct is None or act is None:
-                    raise ValueError("scan references missing DHT")
-                plane = planes[comp["id"]]
-                for by in range(comp["v"]):
-                    for bx in range(comp["h"]):
-                        # --- one 8x8 block (T.81 F.2.1.2 / F.2.2) ---
-                        zz[:] = 0.0
-                        s = _jpeg_huff_decode(br, dct)
-                        if s > 11:
-                            raise ValueError(f"DC category {s} out of range")
-                        diff = _jpeg_extend(br.bits(s), s) if s else 0
-                        preds[comp["id"]] += diff
-                        zz[0] = preds[comp["id"]]
-                        k = 1
-                        while k < 64:
-                            rs = _jpeg_huff_decode(br, act)
-                            r, s = rs >> 4, rs & 0x0F
-                            if s == 0:
-                                if r == 15:  # ZRL: sixteen zeros
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("AC run past end of block")
-                            zz[k] = _jpeg_extend(br.bits(s), s)
-                            k += 1
-                        coeffs[zig] = zz * q
-                        block = basis.T @ coeffs.reshape(8, 8) @ basis + 128.0
-                        y0 = (my * comp["v"] + by) * 8
-                        x0 = (mx * comp["h"] + bx) * 8
-                        plane[y0 : y0 + 8, x0 : x0 + 8] = block
-            mcu_count += 1
-    out_planes = []
-    for c in comps:
-        plane = planes[c["id"]]
-        ry, rx = vmax // c["v"], hmax // c["h"]
-        if ry > 1 or rx > 1:  # nearest-neighbor chroma upsample
-            plane = np.repeat(np.repeat(plane, ry, axis=0), rx, axis=1)
-        out_planes.append(plane[:h_img, :w_img])
-    if len(out_planes) == 1:
-        rgb = out_planes[0][:, :, None]
-        channels = 1
-    elif len(out_planes) == 3:  # JFIF YCbCr (ITU-R BT.601)
-        y, cb, cr = out_planes
-        cb = cb - 128.0
-        cr = cr - 128.0
-        rgb = np.stack(
-            [
-                y + 1.402 * cr,
-                y - 0.344136 * cb - 0.714136 * cr,
-                y + 1.772 * cb,
-            ],
-            axis=-1,
-        )
-        channels = 3
-    else:
-        raise NotImplementedError(f"{len(out_planes)}-component JPEG (CMYK?)")
-    pixels = np.clip(np.rint(rgb), 0, 255).astype(np.uint8).tobytes()
-    return {"width": w_img, "height": h_img, "channels": channels, "pixels": pixels}
-
-
-_IMAGE_DECODERS = {"png": decode_png, "gif": decode_gif, "jpeg": decode_jpeg}
-
-
-def _decode_image_full(payload: bytes, fmt: str) -> dict:
-    """Dispatch to the real per-format decoder, keeping ``pixels``."""
-    dec = _IMAGE_DECODERS.get(fmt)
-    if dec is None:
-        raise NotImplementedError(f"no image decoder for format {fmt}")
-    return dec(payload)
-
-
 def _jpeg_sof_dims(payload: bytes) -> dict:
     """Marker-walk a JPEG for ANY frame header (SOF0-15): width/height/
     component count are plain header fields, readable even when the entropy
@@ -758,26 +227,13 @@ def _png_ihdr_dims(payload: bytes) -> dict:
 
 
 def _decode_image(payload: bytes, fmt: str) -> dict:
-    """METADATA path: header-only parsers (r6, ADVICE r5) — the r5 version
-    fully entropy-decoded pixels (per-bit JPEG Huffman+IDCT, PNG inflate +
-    unfilter, GIF LZW + palette mapping) and then discarded everything but
-    width/height/channels, contradicting the module's own 100 TB design
-    notes. Dimensions and channel counts are plain header fields:
-    JPEG SOF marker walk (:func:`_jpeg_sof_dims` — all variants, incl. the
-    progressive/arithmetic ones whose entropy layer needs libjpeg), PNG
-    IHDR (:func:`_png_ihdr_dims`), GIF descriptor walk (first frame's
-    descriptor via :func:`_gif_frame_records`, no LZW decode). Full decode
-    remains where pixels are consumed (resize_images, image_phash,
-    sample_frames, decode_png/gif/jpeg)."""
+    """METADATA path: dimensions and channel counts are plain header
+    fields — JPEG SOF marker walk (:func:`_jpeg_sof_dims`, every variant),
+    PNG IHDR (:func:`_png_ihdr_dims`). No pixel data is decoded."""
     if fmt == "jpeg":
         return _jpeg_sof_dims(payload)
     if fmt == "png":
         return _png_ihdr_dims(payload)
-    if fmt == "gif":
-        records = _gif_frame_records(payload)
-        if not records:
-            raise ValueError("GIF contains no image frame")
-        return {"width": records[0]["w"], "height": records[0]["h"], "channels": 3}
     raise NotImplementedError(f"no image decoder for format {fmt}")
 
 
@@ -928,321 +384,6 @@ def _decode_audio(payload: bytes, fmt: str) -> dict:
     raise NotImplementedError(f"no audio decoder for format {fmt}")
 
 
-DECODERS = {"image": _decode_image, "audio": _decode_audio}
-
-
-def binary_metadata(df: DataFrame, key: str = "url", binary_col: str = "html") -> DataFrame:
-    """Typed metadata over an opaque binary column (pure JVM except sniffing).
-
-    Length + sha1 are JVM built-ins; modality sniffing is one Arrow batch
-    pass over the payload prefix only.
-    """
-    pruned = df.select(key, binary_col)
-
-    def sniff_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            import hashlib
-
-            rows = {"url": [], "n_bytes": [], "modality": [], "format": [], "sha1": []}
-            for k, payload in zip(pdf[key], pdf[binary_col]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                modality, fmt = _sniff(payload)
-                rows["url"].append(k)
-                rows["n_bytes"].append(len(payload))
-                rows["modality"].append(modality)
-                rows["format"].append(fmt)
-                rows["sha1"].append(hashlib.sha1(payload).hexdigest())
-            yield pd.DataFrame(rows, columns=[f.name for f in META_SCHEMA.fields])
-
-    return pruned.mapInPandas(sniff_batches, META_SCHEMA)
-
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("modality", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_ms", T.DoubleType()),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-# feature columns filled from the decoder dict (everything except the
-# key/modality/error bookkeeping columns)
-_FEATURE_COLS = tuple(
-    f.name for f in FEATURE_SCHEMA.fields if f.name not in ("url", "modality", "decode_error")
-)
-
-
-def decode_features(df: DataFrame, key: str = "url", binary_col: str = "html") -> DataFrame:
-    """Per-payload feature extraction through the pluggable DECODERS table.
-
-    Rows whose modality has no decoder (or whose decoder raises) are kept
-    with ``decode_error`` set — a 100 TB crawl always contains corrupt
-    payloads and dropping them silently hides data loss.
-    """
-    pruned = df.select(key, binary_col)
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {f.name: [] for f in FEATURE_SCHEMA.fields}
-            for k, payload in zip(pdf[key], pdf[binary_col]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                modality, fmt = _sniff(payload)
-                cols["url"].append(k)
-                cols["modality"].append(modality)
-                feat, err = {}, None
-                decoder = DECODERS.get(modality)
-                if decoder is None:
-                    err = f"no decoder for modality={modality}"
-                else:
-                    try:
-                        feat = decoder(payload, fmt)
-                    except NotImplementedError as e:
-                        err = str(e)
-                    except Exception as e:  # corrupt payload: keep the row
-                        err = f"{type(e).__name__}: {e}"
-                for name in _FEATURE_COLS:
-                    cols[name].append(feat.get(name))
-                cols["decode_error"].append(err)
-            # explicit nullable dtypes: a None row must not promote an int
-            # column to float64 (lossy past 2^53 — see image_phash)
-            yield pd.DataFrame(
-                {
-                    "url": cols["url"],
-                    "modality": cols["modality"],
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "channels": pd.array(cols["channels"], dtype="Int32"),
-                    "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
-                    "n_samples": pd.array(cols["n_samples"], dtype="Int64"),
-                    "duration_ms": pd.array(cols["duration_ms"], dtype="Float64"),
-                    "decode_error": cols["decode_error"],
-                },
-                columns=[f.name for f in FEATURE_SCHEMA.fields],
-            )
-
-    return pruned.mapInPandas(decode_batches, FEATURE_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),  # PNG-encoded sampled frame
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame, key: str = "url", binary_col: str = "html", every_n: int = 10
-) -> DataFrame:
-    """Frame sampling: one output row per sampled frame (the EXPLODING row
-    shape — one input row → many output rows — is what matters for the
-    Spark plan). For animated GIFs the sampling is REAL: every ``every_n``-th
-    frame is LZW-decoded and re-encoded as a standalone PNG payload (each
-    frame independently — no inter-frame compositing of partial frames, the
-    standard tradeoff for sampling thumbnails). WebM/MP4 frame decode needs
-    a real codec (libvpx/ffmpeg) and yields a single ``decode_error`` row —
-    their metadata path is :func:`decode_features`.
-    """
-    pruned = df.select(key, binary_col)
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {f.name: [] for f in FRAME_SCHEMA.fields}
-
-            def emit(k, idx, n, frame, err):
-                cols["url"].append(k)
-                cols["frame_idx"].append(idx)
-                cols["n_frames"].append(n)
-                cols["frame"].append(frame)
-                cols["decode_error"].append(err)
-
-            for k, payload in zip(pdf[key], pdf[binary_col]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                modality, fmt = _sniff(payload)
-                if fmt != "gif":
-                    emit(
-                        k,
-                        None,
-                        None,
-                        None,
-                        f"frame sampling needs a codec for {modality}/{fmt} "
-                        "(GIF is the in-container real path)",
-                    )
-                    continue
-                try:
-                    records = _gif_frame_records(payload)
-                    if not records:
-                        raise ValueError("GIF contains no image frame")
-                    for idx in range(0, len(records), every_n):
-                        d = _gif_decode_frame(records[idx])
-                        png = encode_png(
-                            d["width"], d["height"], d["channels"], d["pixels"]
-                        )
-                        emit(k, idx, len(records), png, None)
-                except Exception as e:  # corrupt payload: keep one error row
-                    emit(k, None, None, None, f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(cols, columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    return pruned.mapInPandas(frames, FRAME_SCHEMA)
-
-
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(width: int, height: int, channels: int, pixels: bytes) -> bytes:
-    """REAL pure-stdlib PNG encode (8-bit, filter 0, non-interlaced) — the
-    write half of the thumbnail path. Filter 0 trades a few percent of
-    compression for zero per-byte Python; zlib does the heavy lifting."""
-    import struct
-    import zlib
-
-    color = {1: 0, 2: 4, 3: 2, 4: 6}.get(channels)
-    if color is None:
-        raise ValueError(f"unsupported channel count {channels}")
-    stride = width * channels
-    if len(pixels) != stride * height:
-        raise ValueError(f"pixel buffer is {len(pixels)} bytes, expected {stride * height}")
-    raw = b"".join(b"\x00" + pixels[y * stride : (y + 1) * stride] for y in range(height))
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def _resize_kernel(arr, out_h: int, out_w: int, method: str):
-    """Vectorized numpy resize over an (h, w, c) uint8 array — no Python
-    per-pixel loop. ``nearest`` gathers by index; ``bilinear`` uses the
-    standard half-pixel-center source mapping (align_corners=False)."""
-    import numpy as np
-
-    h, w, _c = arr.shape
-    if method == "nearest":
-        yi = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1)
-        xi = np.minimum(((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1)
-        return arr[yi][:, xi]
-    if method != "bilinear":
-        raise ValueError(f"unknown resize method {method!r}")
-    fy = (np.arange(out_h) + 0.5) * h / out_h - 0.5
-    fx = (np.arange(out_w) + 0.5) * w / out_w - 0.5
-    y0 = np.clip(np.floor(fy).astype(np.int64), 0, h - 1)
-    x0 = np.clip(np.floor(fx).astype(np.int64), 0, w - 1)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = np.clip(fy - y0, 0.0, 1.0)[:, None, None]
-    wx = np.clip(fx - x0, 0.0, 1.0)[None, :, None]
-    a = arr.astype(np.float64)
-    top = a[y0][:, x0] * (1.0 - wx) + a[y0][:, x1] * wx
-    bot = a[y1][:, x0] * (1.0 - wx) + a[y1][:, x1] * wx
-    out = top * (1.0 - wy) + bot * wy
-    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("src_width", T.IntegerType()),
-        T.StructField("src_height", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("png", T.BinaryType()),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame,
-    key: str = "url",
-    binary_col: str = "html",
-    max_side: int = 256,
-    method: str = "bilinear",
-) -> DataFrame:
-    """Thumbnail operator: decode (PNG/GIF/baseline JPEG, all real) →
-    aspect-preserving downscale so max(w, h) ≤ ``max_side`` (never
-    upscales) → re-encode as filter-0 PNG. One output row per input image;
-    non-image or failing payloads are kept with ``decode_error`` set.
-
-    Design for 100 TB: prunes to (key, binary) before the UDF; the resize
-    itself is one vectorized numpy gather/lerp per image (no per-pixel
-    Python); Arrow batch size bounds peak memory alongside the decoders'
-    64 MP dimension caps. Reference parity note: the reference repo has no
-    image path — this operator exists for the training-data-pipeline
-    surface (thumbnailing a crawl before feature extraction).
-    """
-    import numpy as np
-
-    pruned = df.select(key, binary_col)
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {f.name: [] for f in RESIZED_SCHEMA.fields}
-            for k, payload in zip(pdf[key], pdf[binary_col]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                modality, fmt = _sniff(payload)
-                row = dict.fromkeys(cols, None)
-                row["url"] = k
-                try:
-                    if modality != "image":
-                        raise NotImplementedError(f"not an image (modality={modality})")
-                    d = _decode_image_full(payload, fmt)
-                    w, h, c = d["width"], d["height"], d["channels"]
-                    arr = np.frombuffer(d["pixels"], dtype=np.uint8).reshape(h, w, c)
-                    scale = max_side / max(w, h)
-                    if scale < 1.0:
-                        ow = max(1, round(w * scale))
-                        oh = max(1, round(h * scale))
-                        arr = _resize_kernel(arr, oh, ow, method)
-                    else:
-                        ow, oh = w, h  # never upscale
-                    row.update(
-                        src_width=w,
-                        src_height=h,
-                        width=ow,
-                        height=oh,
-                        channels=c,
-                        png=encode_png(ow, oh, c, arr.tobytes()),
-                    )
-                except NotImplementedError as e:
-                    row["decode_error"] = str(e)
-                except Exception as e:  # corrupt payload: keep the row
-                    row["decode_error"] = f"{type(e).__name__}: {e}"
-                for name, v in row.items():
-                    cols[name].append(v)
-            yield pd.DataFrame(cols, columns=[f.name for f in RESIZED_SCHEMA.fields])
-
-    return pruned.mapInPandas(resize_batches, RESIZED_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # WebM / Matroska metadata (EBML, RFC 8794 + the public Matroska element IDs)
 # ---------------------------------------------------------------------------
@@ -1369,153 +510,106 @@ def _decode_video(payload: bytes, fmt: str) -> dict:
     raise NotImplementedError(f"no video decoder for format {fmt}")
 
 
-DECODERS["video"] = _decode_video  # registered here: defined below the table
+DECODERS = {"image": _decode_image, "audio": _decode_audio, "video": _decode_video}
 
 
-# ---------------------------------------------------------------------------
-# Perceptual hash (pHash) + banded-Hamming image near-dup
-# ---------------------------------------------------------------------------
+def binary_metadata(df: DataFrame, key: str = "url", binary_col: str = "html") -> DataFrame:
+    """Typed metadata over an opaque binary column (pure JVM except sniffing).
 
-PHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("phash", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
-def phash64(arr) -> int:
-    """64-bit perceptual hash of an (h, w, c) uint8 array: BT.601 luma →
-    bilinear 32×32 → 2-D DCT (numpy matmul) → 8×8 low-frequency block →
-    threshold at the median (DC excluded from the median so flat images
-    don't flip half their bits on noise). Same-image re-encodes land within
-    a few bits; distinct images ~32 bits apart (random-bit expectation)."""
-    import numpy as np
-
-    if arr.shape[2] >= 3:
-        # BT.601 luma from the color channels, alpha ignored (ADVICE r5:
-        # RGBA previously fell through to channel 0 = red only, so RGB
-        # and RGBA re-encodes of one image hashed differently)
-        luma = 0.299 * arr[..., 0] + 0.587 * arr[..., 1] + 0.114 * arr[..., 2]
-    else:
-        luma = arr[..., 0].astype(np.float64)
-    small = _resize_kernel(
-        np.clip(np.rint(luma), 0, 255).astype(np.uint8)[:, :, None], 32, 32, "bilinear"
-    )[:, :, 0].astype(np.float64)
-    n = 32
-    u = np.arange(n).reshape(n, 1)
-    x = np.arange(n).reshape(1, n)
-    basis = np.cos((2 * x + 1) * u * np.pi / (2 * n)) * np.sqrt(2.0 / n)
-    basis[0, :] = np.sqrt(1.0 / n)
-    freq = basis @ small @ basis.T
-    block = freq[:8, :8].reshape(64)
-    median = float(np.median(block[1:]))
-    bits = 0
-    for i, v in enumerate(block):
-        if v > median:
-            bits |= 1 << i
-    return bits - (1 << 64) if bits >= (1 << 63) else bits  # signed long
-
-
-def image_phash(df: DataFrame, key: str = "url", binary_col: str = "html") -> DataFrame:
-    """Per-image 64-bit perceptual hash through the real decoders (PNG/
-    GIF/baseline JPEG). Prunes to (key, binary); one vectorized numpy
-    resize+DCT per image; corrupt/undecodable payloads kept with
-    ``decode_error``."""
-    import numpy as np
-
+    Length + sha1 are JVM built-ins; modality sniffing is one Arrow batch
+    pass over the payload prefix only.
+    """
     pruned = df.select(key, binary_col)
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def sniff_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cols: dict[str, list] = {f.name: [] for f in PHASH_SCHEMA.fields}
+            import hashlib
+
+            rows = {"url": [], "n_bytes": [], "modality": [], "format": [], "sha1": []}
             for k, payload in zip(pdf[key], pdf[binary_col]):
                 if payload is None:
                     continue
                 payload = bytes(payload)
                 modality, fmt = _sniff(payload)
-                row = dict.fromkeys(cols, None)
-                row["url"] = k
-                try:
-                    if modality != "image":
-                        raise NotImplementedError(f"not an image (modality={modality})")
-                    d = _decode_image_full(payload, fmt)
-                    arr = np.frombuffer(d["pixels"], dtype=np.uint8).reshape(
-                        d["height"], d["width"], d["channels"]
-                    )
-                    row.update(
-                        phash=phash64(arr), width=d["width"], height=d["height"]
-                    )
-                except NotImplementedError as e:
-                    row["decode_error"] = str(e)
-                except Exception as e:
-                    row["decode_error"] = f"{type(e).__name__}: {e}"
-                for name, v in row.items():
-                    cols[name].append(v)
-            # the hash column MUST be nullable Int64, not inferred: a None
-            # from an undecodable row in the same batch would promote the
-            # column to float64, whose 53-bit mantissa silently rounds the
-            # low ~11 bits of a 64-bit hash away (measured: 0x…1155 →
-            # 0x…1000). Small ints survive float64; full-width hashes don't.
+                rows["url"].append(k)
+                rows["n_bytes"].append(len(payload))
+                rows["modality"].append(modality)
+                rows["format"].append(fmt)
+                rows["sha1"].append(hashlib.sha1(payload).hexdigest())
+            yield pd.DataFrame(rows, columns=[f.name for f in META_SCHEMA.fields])
+
+    return pruned.mapInPandas(sniff_batches, META_SCHEMA)
+
+
+FEATURE_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("modality", T.StringType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("channels", T.IntegerType()),
+        T.StructField("sample_rate", T.IntegerType()),
+        T.StructField("n_samples", T.LongType()),
+        T.StructField("duration_ms", T.DoubleType()),
+        T.StructField("decode_error", T.StringType()),
+    ]
+)
+
+# feature columns filled from the decoder dict (everything except the
+# key/modality/error bookkeeping columns)
+_FEATURE_COLS = tuple(
+    f.name for f in FEATURE_SCHEMA.fields if f.name not in ("url", "modality", "decode_error")
+)
+
+
+def decode_features(df: DataFrame, key: str = "url", binary_col: str = "html") -> DataFrame:
+    """Per-payload feature extraction through the pluggable DECODERS table.
+
+    Rows whose modality has no decoder (or whose decoder raises) are kept
+    with ``decode_error`` set — a 100 TB crawl always contains corrupt
+    payloads and dropping them silently hides data loss.
+    """
+    pruned = df.select(key, binary_col)
+
+    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cols: dict[str, list] = {f.name: [] for f in FEATURE_SCHEMA.fields}
+            for k, payload in zip(pdf[key], pdf[binary_col]):
+                if payload is None:
+                    continue
+                payload = bytes(payload)
+                modality, fmt = _sniff(payload)
+                cols["url"].append(k)
+                cols["modality"].append(modality)
+                feat, err = {}, None
+                decoder = DECODERS.get(modality)
+                if decoder is None:
+                    err = f"no decoder for modality={modality}"
+                else:
+                    try:
+                        feat = decoder(payload, fmt)
+                    except NotImplementedError as e:
+                        err = str(e)
+                    except Exception as e:  # corrupt payload: keep the row
+                        err = f"{type(e).__name__}: {e}"
+                for name in _FEATURE_COLS:
+                    cols[name].append(feat.get(name))
+                cols["decode_error"].append(err)
+            # explicit nullable dtypes: a None row must not promote an int
+            # column to float64 (lossy past 2^53)
             yield pd.DataFrame(
                 {
                     "url": cols["url"],
-                    "phash": pd.array(cols["phash"], dtype="Int64"),
+                    "modality": cols["modality"],
                     "width": pd.array(cols["width"], dtype="Int32"),
                     "height": pd.array(cols["height"], dtype="Int32"),
+                    "channels": pd.array(cols["channels"], dtype="Int32"),
+                    "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
+                    "n_samples": pd.array(cols["n_samples"], dtype="Int64"),
+                    "duration_ms": pd.array(cols["duration_ms"], dtype="Float64"),
                     "decode_error": cols["decode_error"],
                 },
-                columns=[f.name for f in PHASH_SCHEMA.fields],
+                columns=[f.name for f in FEATURE_SCHEMA.fields],
             )
 
-    return pruned.mapInPandas(hash_batches, PHASH_SCHEMA)
-
-
-def phash_dup_pairs(hashed: DataFrame, max_hamming: int = 3, n_bands: int = 4) -> DataFrame:
-    """Image near-dup candidate pairs from (url, phash) rows, ENTIRELY
-    JVM-side: pigeonhole banding (two hashes within ``max_hamming`` bits
-    must agree on ≥1 of ``n_bands`` disjoint 16-bit bands, valid while
-    max_hamming < n_bands) → bucket equi-join → exact Hamming via
-    ``bit_count(a XOR b)`` ≤ threshold. The same shape as the text
-    SimHash64 dedup: never all-pairs, each band join touches only its
-    bucket — at crawl scale the band cardinality keeps buckets small and
-    AQE handles the skewed ones."""
-    if not max_hamming < n_bands:
-        raise ValueError("pigeonhole banding needs max_hamming < n_bands")
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    bands = hashed.select(
-        F.col("url"),
-        F.col("phash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("phash", b * width).bitwiseAND(F.lit(mask)).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("url", "phash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = bands.select(
-        F.col("band"), F.col("key"), F.col("url").alias("url_a"), F.col("phash").alias("phash_a")
-    )
-    b = bands.select(
-        F.col("band"), F.col("key"), F.col("url").alias("url_b"), F.col("phash").alias("phash_b")
-    )
-    return (
-        a.join(b, ["band", "key"])
-        .where(F.col("url_a") < F.col("url_b"))
-        .select(
-            "url_a",
-            "url_b",
-            F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return pruned.mapInPandas(decode_batches, FEATURE_SCHEMA)

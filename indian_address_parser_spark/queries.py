@@ -202,14 +202,6 @@ def _blocked(spark, sf_dir) -> DataFrame:
     return f.withColumn("block_key", F.concat_ws("|", "pincode", "city"))
 
 
-def q_er_block_sizes(spark, sf_dir):
-    return (
-        _blocked(spark, sf_dir)
-        .groupBy("block_key")
-        .agg(F.count("*").alias("n"))
-    )
-
-
 def q_er_candidate_pairs(spark, sf_dir):
     # r6: same §2.4 fix as _scored_pairs — the self-join otherwise runs the
     # normalize-UDF + field-extraction subtree once per side; checkpoint the
@@ -531,34 +523,6 @@ def _shingles(
     return d.select("doc_id", F.explode("sh").alias("shingle"))
 
 
-def q_dedup_minhash_signatures(spark, sf_dir):
-    sh = _shingles(spark, sf_dir)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(str(seed) + "|"), F.col("shingle")))).alias(f"mh{seed}")
-        for seed in range(4)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def q_dedup_minhash_band_pairs(spark, sf_dir):
-    sig = q_dedup_minhash_signatures(spark, sf_dir)
-    bands = sig.select(
-        "doc_id",
-        F.concat_ws("|", "mh0", "mh1").alias("band0"),
-        F.concat_ws("|", "mh2", "mh3").alias("band1"),
-    )
-    stacked = bands.select(
-        "doc_id", F.explode(F.array("band0", "band1")).alias("band")
-    )
-    a = stacked.select(F.col("doc_id").alias("id_a"), "band")
-    b = stacked.select(F.col("doc_id").alias("id_b"), F.col("band").alias("bd"))
-    return (
-        a.join(b, (F.col("band") == F.col("bd")) & (F.col("id_a") < F.col("id_b")))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def q_dedup_ngram_jaccard(spark, sf_dir):
     sh = _shingles(spark, sf_dir)
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -838,27 +802,6 @@ def q_dedup_simhash_pairs(spark, sf_dir, max_hamming: int = 3):
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def q_dedup_simhash(spark, sf_dir, n_bits: int = 16):
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
-    )
-    d = d.withColumn("h", F.md5("w"))
-    bit_cols = [
-        F.sum(
-            F.when(
-                F.substring("h", j + 1, 1).isin("8", "9", "a", "b", "c", "d", "e", "f"),
-                1,
-            ).otherwise(-1)
-        ).alias(f"b{j}")
-        for j in range(n_bits)
-    ]
-    agg = d.groupBy("doc_id").agg(*bit_cols)
-    sim = F.concat(
-        *[F.when(F.col(f"b{j}") > 0, F.lit("1")).otherwise(F.lit("0")) for j in range(n_bits)]
-    )
-    return agg.select("doc_id", sim.alias("simhash"))
 
 
 # --- text analysis ---------------------------------------------------------
@@ -2140,31 +2083,6 @@ def _oracle_shingles() -> str:
     """
 
 
-def _oracle_minhash_sig() -> str:
-    aggs = ", ".join(
-        f"min(md5('{seed}|' || shingle)) AS mh{seed}" for seed in range(4)
-    )
-    return f"SELECT doc_id, {aggs} FROM ({_oracle_shingles()}) GROUP BY doc_id"
-
-
-def _oracle_simhash(n_bits: int = 16) -> str:
-    sums = ", ".join(
-        f"sum(CASE WHEN substr(h, {j + 1}, 1) IN ('8','9','a','b','c','d','e','f') "
-        f"THEN 1 ELSE -1 END) AS b{j}"
-        for j in range(n_bits)
-    )
-    bits = " || ".join(
-        f"(CASE WHEN b{j} > 0 THEN '1' ELSE '0' END)" for j in range(n_bits)
-    )
-    return f"""
-    SELECT doc_id, {bits} AS simhash FROM (
-      SELECT doc_id, {sums} FROM (
-        SELECT doc_id, md5(unnest(string_split(text, ' '))) AS h FROM documents
-      ) GROUP BY doc_id
-    )
-    """
-
-
 def _oracle_minhash_sig_n(n_perms: int) -> str:
     aggs = ", ".join(
         f"min(md5('{seed}|' || shingle)) AS mh{seed}" for seed in range(n_perms)
@@ -2287,11 +2205,6 @@ def _oracle_train_entity_weights() -> str:
         for e in _A2_ENTITIES
     )
     return f"WITH flags AS ({flags}), totals AS (SELECT count(*) AS n, {tot_cols} FROM flags) {selects}"
-
-
-def _oracle_train_sample_weights() -> str:
-    prelude, w = _oracle_weight_sql()
-    return f"{prelude} SELECT doc_id, round({w}, 6) AS weight FROM flags CROSS JOIN totals"
 
 
 def _oracle_train_weighted_sample() -> str:
@@ -2657,17 +2570,15 @@ def oracle_sqls(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
 
 # The driver's correctness gate records at most 50 ``queries()`` entries
 # (r4 lesson: entries past the cap silently get NO evidence row). The
-# registry therefore carries exactly the non-subsumed set; every pruned
-# key remains implemented, pytest-covered, and strictly dominated by a
-# registered successor:
-#   er_synth_addr            -> fixture echo; er_normalize hashes the same rows
-#   er_block_sizes           -> GROUP BY projection of the hash-oracled er_block_key
-#   dedup_minhash_signatures -> subsumed by dedup_minhash128_band_pairs
-#   dedup_minhash_band_pairs -> 32-perm teaching variant of the 128-perm entry
-#   dedup_ngram_jaccard      -> no DF cap; _dfcap is the production shape
-#   dedup_simhash (16-bit)   -> subsumed by dedup_simhash64 + banded pairs
-#   dedup_simhash64          -> signature projection of dedup_simhash_pairs
-#   train_sample_weights     -> intermediate of train_weighted_sample
+# registry therefore carries exactly the non-subsumed set. The ``q_*``
+# functions left out of it, each with its caller (a tripwire in
+# tests/test_entry_contract.py keeps this list exact):
+#   q_er_synth_addr         -> __spark_entry__.entry (fixture echo)
+#   q_dedup_ngram_jaccard   -> tests/test_dedup_sim.py (no DF cap; _dfcap is
+#                              the production shape)
+#   q_dedup_simhash64       -> tests/test_dedup_sim.py (signature projection
+#                              of dedup_simhash_pairs)
+#   q_train_sample_weights  -> q_train_weighted_sample (its intermediate)
 SPARK_QUERIES = {
     "er_normalize": q_er_normalize,
     "er_extract_fields": q_er_extract_fields,

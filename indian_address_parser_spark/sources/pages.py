@@ -291,9 +291,3 @@ def _labeled_pairs(truth: DataFrame, hh: DataFrame) -> DataFrame:
     )
     pos = pairs.where(F.col("is_match"))
     return pos.unionByName(neg)
-
-
-def write_fixture(spark: SparkSession, out_dir: str, n_households: int = 1000) -> None:
-    tables = generate(spark, n_households)
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")

@@ -56,20 +56,11 @@ def main() -> None:
     # multimodal: binary columns dominate bytes at crawl scale, so the
     # docstring claim "prunes to (key, binary) before the UDF" must hold in
     # the plan — the scan reads ONLY url+html, never text/lang/warc_ts
-    from indian_address_parser_spark.operators.multimodal import (
-        decode_features,
-        resize_images,
-    )
+    from indian_address_parser_spark.operators.multimodal import decode_features
 
     capture(
         "multimodal decode_features (pruned binary scan → MapInPandas)",
         decode_features(pages),
-        must_contain=("ReadSchema: struct<url:string,html:binary>", "MapInPandas"),
-        must_not=("text:string", "warc_ts"),
-    )
-    capture(
-        "multimodal resize_images (pruned binary scan → MapInPandas)",
-        resize_images(pages, max_side=64),
         must_contain=("ReadSchema: struct<url:string,html:binary>", "MapInPandas"),
         must_not=("text:string", "warc_ts"),
     )
@@ -108,20 +99,25 @@ def main() -> None:
 
     # CC label step follows the loop's skew posture: partial-agg + join
     # under the giant-component guard, single-exchange window otherwise
-    from indian_address_parser_spark.operators.cc import connected_components
+    from indian_address_parser_spark.operators import cc
 
     cc_edges = spark.createDataFrame(
         [(f"n{(i * 13) % 60}", f"n{(i * 29 + 7) % 60}") for i in range(45)],
         ["src", "dst"],
     )
     giant_log: list = []
-    connected_components(cc_edges, giant_degree_threshold=2, _explain_log=giant_log).count()
+    orig_giant = cc._GIANT_DEGREE
+    cc._GIANT_DEGREE = 2
+    try:
+        cc.connected_components(cc_edges, _explain_log=giant_log).count()
+    finally:
+        cc._GIANT_DEGREE = orig_giant
     plan = giant_log[0]
     sections.append(f"## CC label step, giant posture (full queryExecution)\n\n```\n{plan}\n```\n")
     checks.append(("CC label (giant)", "does NOT contain 'Window'", "Window" not in plan))
     checks.append(("CC label (giant)", "contains 'Aggregate'", "Aggregate" in plan))
     bounded_log: list = []
-    connected_components(cc_edges, _explain_log=bounded_log).count()
+    cc.connected_components(cc_edges, _explain_log=bounded_log).count()
     checks.append(
         ("CC label (bounded)", "contains 'Window' (1-exchange path)", "Window" in bounded_log[0])
     )

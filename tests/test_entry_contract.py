@@ -30,6 +30,37 @@ class TestEntry:
             "dedup_minhash128_xxhash_band_pairs",
         }
 
+    def test_unregistered_queries_have_known_callers(self):
+        """Every module-level ``q_*`` function outside ``SPARK_QUERIES`` must
+        be one the comment above the registry names with its caller; a new
+        unregistered query (or a dead one) fails here until it is listed
+        or deleted."""
+        import ast
+        import os
+
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        path = os.path.join(root, "indian_address_parser_spark", "queries.py")
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        defs = {
+            n.name
+            for n in tree.body
+            if isinstance(n, ast.FunctionDef) and n.name.startswith("q_")
+        }
+        (registry,) = [
+            n.value
+            for n in tree.body
+            if isinstance(n, ast.Assign)
+            and any(getattr(t, "id", None) == "SPARK_QUERIES" for t in n.targets)
+        ]
+        registered = {v.id for v in registry.values}
+        assert defs - registered == {
+            "q_er_synth_addr",  # __spark_entry__.entry
+            "q_dedup_ngram_jaccard",  # tests/test_dedup_sim.py
+            "q_dedup_simhash64",  # tests/test_dedup_sim.py
+            "q_train_sample_weights",  # q_train_weighted_sample
+        }
+
     def test_rows_only_queries_run(self, spark):
         q = entrymod.queries()
         assert q["er_pipeline_full"](spark, "/root/testdata/sf0.001").count() > 0

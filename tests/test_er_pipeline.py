@@ -404,17 +404,24 @@ class TestSkewHandling:
 
 
 class TestConnectedComponents:
-    @pytest.mark.parametrize("stars", ["window", "join"])
-    def test_matches_bruteforce_on_random_graph(self, spark, stars):
+    # _GIANT_DEGREE = 0 puts every round and the label step on join stars
+    @pytest.mark.parametrize("giant_degree", [1_000_000, 0], ids=["window", "join"])
+    def test_matches_bruteforce_on_random_graph(self, spark, monkeypatch, giant_degree):
+        from indian_address_parser_spark.operators import cc as cc_mod
+
+        monkeypatch.setattr(cc_mod, "_GIANT_DEGREE", giant_degree)
         # deterministic pseudo-random graph over 60 nodes
         edges = [
             (f"n{(i * 13) % 60}", f"n{(i * 29 + 7) % 60}") for i in range(45)
         ]
         df = spark.createDataFrame(edges, ["src", "dst"])
+        log: list = []
         got = {
             r["mention_id"]: r["cluster_id"]
-            for r in connected_components(df, stars=stars).collect()
+            for r in connected_components(df, _strategy_log=log).collect()
         }
+        want_strategy = "window" if giant_degree else "join"
+        assert log and all(st == want_strategy for st in log), log
 
         # union-find reference
         parent: dict[str, str] = {}
@@ -441,10 +448,14 @@ class TestConnectedComponents:
             for mbr in members:
                 assert got[mbr] == want, (mbr, got[mbr], want)
 
-    def test_auto_switches_to_join_on_mega_component(self, spark):
-        """A hub-and-spoke mega-component must push 'auto' onto the join
-        path (the window formulation would put the whole neighborhood in a
-        single window partition), with output still matching brute force."""
+    def test_auto_switches_to_join_on_mega_component(self, spark, monkeypatch):
+        """A hub-and-spoke mega-component must push the strategy choice onto
+        the join path (the window formulation would put the whole
+        neighborhood in a single window partition), with output still
+        matching brute force."""
+        from indian_address_parser_spark.operators import cc as cc_mod
+
+        monkeypatch.setattr(cc_mod, "_GIANT_DEGREE", 10)
         hub_edges = [("hub", f"m{i:03d}") for i in range(50)]
         # plus a separate bounded household to show mixed graphs still work
         hh_edges = [("a1", "a2"), ("a2", "a3")]
@@ -452,9 +463,7 @@ class TestConnectedComponents:
         log: list = []
         got = {
             r["mention_id"]: r["cluster_id"]
-            for r in connected_components(
-                df, giant_degree_threshold=10, _strategy_log=log
-            ).collect()
+            for r in connected_components(df, _strategy_log=log).collect()
         }
         assert log and all(s == "join" for s in log), log
         assert got["hub"] == "hub"
@@ -469,19 +478,25 @@ class TestConnectedComponents:
         assert log and all(s == "window" for s in log), log
         assert len(got) == 40
 
-    def test_auto_matches_fixed_strategies(self, spark):
+    def test_auto_matches_fixed_strategies(self, spark, monkeypatch):
+        """The default (window on this bounded graph) and forced join stars
+        (``_GIANT_DEGREE = 0``) label identically."""
+        from indian_address_parser_spark.operators import cc as cc_mod
+
         edges = [
             (f"n{(i * 13) % 60}", f"n{(i * 29 + 7) % 60}") for i in range(45)
         ]
         df = spark.createDataFrame(edges, ["src", "dst"])
-        runs = {
-            s: sorted(
+
+        def run():
+            return sorted(
                 (r["mention_id"], r["cluster_id"])
-                for r in connected_components(df, stars=s).collect()
+                for r in connected_components(df).collect()
             )
-            for s in ("auto", "window", "join")
-        }
-        assert runs["auto"] == runs["window"] == runs["join"]
+
+        default = run()
+        monkeypatch.setattr(cc_mod, "_GIANT_DEGREE", 0)
+        assert run() == default
 
     def test_singletons_become_own_cluster(self, spark):
         edges = spark.createDataFrame([("a", "b")], ["src", "dst"])
@@ -490,7 +505,7 @@ class TestConnectedComponents:
         got = {r["mention_id"]: r["cluster_id"] for r in out.collect()}
         assert got == {"a": "a", "b": "a", "c": "c"}
 
-    def test_label_step_follows_skew_posture(self, spark):
+    def test_label_step_follows_skew_posture(self, spark, monkeypatch):
         """The final labeling must match the star loop's skew posture
         (VERDICT r3 #1): under the giant-component posture it is
         partial-agg + join — window partitions are not skew-splittable,
@@ -499,17 +514,18 @@ class TestConnectedComponents:
         single-exchange window is used instead (the r4 scaling run
         measured always-agg+join as a −8% efficiency tax on the link
         stage)."""
+        from indian_address_parser_spark.operators import cc as cc_mod
+
         edges = [(f"n{(i * 13) % 60}", f"n{(i * 29 + 7) % 60}") for i in range(45)]
         df = spark.createDataFrame(edges, ["src", "dst"])
+        bounded_log: list = []
+        b = connected_components(df, _explain_log=bounded_log).collect()
         giant_log: list = []
-        a = connected_components(
-            df, giant_degree_threshold=2, _explain_log=giant_log
-        ).collect()
+        monkeypatch.setattr(cc_mod, "_GIANT_DEGREE", 2)
+        a = connected_components(df, _explain_log=giant_log).collect()
         assert giant_log, "explain hook did not fire"
         assert "Window" not in giant_log[0], giant_log[0]
         assert "Aggregate" in giant_log[0]
-        bounded_log: list = []
-        b = connected_components(df, _explain_log=bounded_log).collect()
         assert "Window" in bounded_log[0], bounded_log[0]
         # both postures label identically
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
@@ -625,7 +641,7 @@ class TestBlockLocalComponents:
 class TestHashCollisionGuard:
     """The CC loop runs on xxhash64 keys; at 10^12 nodes n²/2⁶⁴ collisions
     become real merges. The runtime audit must detect a collided key space
-    and either fall back to string keys (correct output) or raise."""
+    and fall back to string keys (correct output)."""
 
     EDGES = [(f"n{(i * 13) % 60}", f"n{(i * 29 + 7) % 60}") for i in range(45)]
 
@@ -635,32 +651,35 @@ class TestHashCollisionGuard:
         # collapse the key space to ≤4 values: guaranteed collisions, and
         # any loop run on these keys would merge unrelated components
         monkeypatch.setattr(cc_mod, "_hash_id", lambda col: F.xxhash64(col) % 4)
+        monkeypatch.setattr(cc_mod, "_AUDIT_MIN_NODES", 0)
         df = spark.createDataFrame(self.EDGES, ["src", "dst"])
         got = {
             r["mention_id"]: r["cluster_id"]
-            for r in cc_mod.connected_components(df, audit_min_nodes=0).collect()
+            for r in cc_mod.connected_components(df).collect()
         }
         assert got == _bruteforce_clusters(self.EDGES)
 
-    def test_forced_collision_error_mode_raises(self, spark, monkeypatch):
-        from indian_address_parser_spark.operators import cc as cc_mod
-
-        monkeypatch.setattr(cc_mod, "_hash_id", lambda col: F.lit(7).cast("long"))
-        df = spark.createDataFrame(self.EDGES, ["src", "dst"])
-        with pytest.raises(RuntimeError, match="collision"):
-            cc_mod.connected_components(df, on_hash_collision="error", audit_min_nodes=0)
-
     def test_audit_gated_by_node_count(self, spark, monkeypatch):
-        """Below ``audit_min_nodes`` (default 10⁸ — P(collision) ≤ 2.7e-4)
-        the audit jobs must not run at all: even a force-collided key
-        space sails through error mode, proving no audit agg executed.
+        """Below ``_AUDIT_MIN_NODES`` (10⁸ — P(collision) ≤ 2.7e-4) the
+        audit must not run at all: a force-collided key space then runs
+        the loop on the collided keys and merges unrelated components.
+        With the gate at 0 the same input is audited and labels correctly.
         The gate is what keeps small-graph CC at the r3 job structure."""
         from indian_address_parser_spark.operators import cc as cc_mod
 
         monkeypatch.setattr(cc_mod, "_hash_id", lambda col: F.xxhash64(col) % 4)
         df = spark.createDataFrame(self.EDGES, ["src", "dst"])
-        out = cc_mod.connected_components(df, on_hash_collision="error").collect()
-        assert out  # no RuntimeError: the audit never ran at 60 nodes
+        want = _bruteforce_clusters(self.EDGES)
+
+        def labels():
+            return {
+                r["mention_id"]: r["cluster_id"]
+                for r in cc_mod.connected_components(df).collect()
+            }
+
+        assert labels() != want  # the audit never ran at 60 nodes
+        monkeypatch.setattr(cc_mod, "_AUDIT_MIN_NODES", 0)
+        assert labels() == want
 
     def test_clean_hash_space_stays_on_hash_path(self, spark, monkeypatch):
         """No collision → the (cheap) hash path must be used, not the
@@ -672,10 +691,11 @@ class TestHashCollisionGuard:
         monkeypatch.setattr(
             cc_mod, "_hash_id", lambda col: calls.append(1) or real(col)
         )
+        monkeypatch.setattr(cc_mod, "_AUDIT_MIN_NODES", 0)
         df = spark.createDataFrame(self.EDGES, ["src", "dst"])
         got = {
             r["mention_id"]: r["cluster_id"]
-            for r in cc_mod.connected_components(df, audit_min_nodes=0).collect()
+            for r in cc_mod.connected_components(df).collect()
         }
         assert got == _bruteforce_clusters(self.EDGES)
         # nodes build (1) + initial edge keying (2) = 3 calls; the string

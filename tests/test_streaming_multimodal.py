@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from indian_address_parser_spark.operators.multimodal import (
     binary_metadata,
     decode_features,
-    sample_frames,
 )
 from indian_address_parser_spark.sources.pages import generate
 
@@ -62,35 +61,6 @@ class TestMultimodal:
         assert k["modality"] == "image" and k["decode_error"] is None
         assert (k["width"], k["height"], k["channels"]) == (300, 296, 3)
         assert rows["corrupt"]["decode_error"] is not None
-
-    def test_sample_frames_real_gif(self, spark):
-        """REAL frame sampling: a 7-frame animated GIF sampled every 3
-        frames yields frames 0/3/6, each a decodable PNG whose pixels match
-        the palette-mapped source indices; a webm payload (no codec in
-        container) yields one decode_error row."""
-        from indian_address_parser_spark.operators.multimodal import decode_png
-
-        idx_frames = [(2, 2, bytes([fi % 4] * 4)) for fi in range(7)]
-        gif = _make_gif(idx_frames, _PALETTE4)
-        df = spark.createDataFrame(
-            [
-                ("anim", bytearray(gif)),
-                ("vid", bytearray(b"\x1aE\xdf\xa3" + b"f" * 64)),
-            ],
-            ["url", "html"],
-        )
-        rows = sample_frames(df, every_n=3).collect()
-        anim = sorted(
-            (r for r in rows if r["url"] == "anim"), key=lambda r: r["frame_idx"]
-        )
-        assert [r["frame_idx"] for r in anim] == [0, 3, 6]
-        assert all(r["n_frames"] == 7 and r["decode_error"] is None for r in anim)
-        for r in anim:
-            d = decode_png(bytes(r["frame"]))
-            assert (d["width"], d["height"], d["channels"]) == (2, 2, 3)
-            assert d["pixels"] == _rgb(bytes([r["frame_idx"] % 4] * 4))
-        (vid,) = [r for r in rows if r["url"] == "vid"]
-        assert vid["frame"] is None and "codec" in vid["decode_error"]
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
@@ -492,184 +462,6 @@ class TestStreaming:
         assert r["first_ts"] <= r["last_ts"]
 
 
-# --- GIF: independent encoder (real LZW, not the decoder inverted) ---------
-
-
-def _gif_lzw_encode(data: bytes, min_code_size: int) -> bytes:
-    """Standard GIF LZW encoder with late code-width change — implemented
-    independently of the decoder so the roundtrip is not self-confirming."""
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    table = {bytes([i]): i for i in range(clear)}
-    next_code, width = eoi + 1, min_code_size + 1
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    w = b""
-    for ch in data:
-        wc = w + bytes([ch])
-        if wc in table:
-            w = wc
-            continue
-        emit(table[w])
-        if next_code < 4096:
-            table[wc] = next_code
-            next_code += 1
-            # encoder lags the decoder's table by one entry → +1
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        w = bytes([ch])
-    if w:
-        emit(table[w])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _make_gif(
-    frames: list[tuple[int, int, bytes]],
-    palette: bytes,
-    interlace_first: bool = False,
-) -> bytes:
-    """Assemble a real GIF89a: global palette + one image block per
-    (w, h, index_bytes) frame."""
-    import math
-    import struct
-
-    n_colors = len(palette) // 3
-    pal_bits = max(1, math.ceil(math.log2(n_colors)))
-    padded = palette + b"\x00" * (3 * (1 << pal_bits) - len(palette))
-    w0, h0, _ = frames[0]
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w0, h0, 0x80 | (pal_bits - 1), 0, 0)
-    out += padded
-    min_code_size = max(2, pal_bits)
-    for fi, (w, h, idx) in enumerate(frames):
-        iflags = 0x40 if (interlace_first and fi == 0) else 0
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, iflags)
-        out += bytes([min_code_size])
-        data = _gif_lzw_encode(idx, min_code_size)
-        for i in range(0, len(data), 255):
-            chunk = data[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-_PALETTE4 = bytes(
-    [255, 0, 0, 0, 255, 0, 0, 0, 255, 40, 41, 42]
-)  # red green blue gray
-
-
-def _rgb(idx: bytes, palette: bytes = _PALETTE4) -> bytes:
-    return b"".join(palette[3 * i : 3 * i + 3] for i in idx)
-
-
-class TestGifDecode:
-    def test_gif_lzw_roundtrip_with_repeats(self):
-        """Repeated runs force real table entries AND the KwKwK case."""
-        from indian_address_parser_spark.operators.multimodal import decode_gif
-
-        idx = bytes([0, 0, 0, 0, 1, 1, 2, 2, 0, 0, 0, 1, 1, 1, 2, 3] * 4)
-        gif = _make_gif([(8, 8, idx)], _PALETTE4)
-        d = decode_gif(gif)
-        assert (d["width"], d["height"], d["channels"], d["n_frames"]) == (8, 8, 3, 1)
-        assert d["pixels"] == _rgb(idx)
-
-    def test_gif_interlaced_first_frame(self):
-        from indian_address_parser_spark.operators.multimodal import decode_gif
-
-        h, w = 9, 3  # hits all four interlace passes
-        rows = [bytes([(y + x) % 4 for x in range(w)]) for y in range(h)]
-        order = (
-            list(range(0, h, 8))
-            + list(range(4, h, 8))
-            + list(range(2, h, 4))
-            + list(range(1, h, 2))
-        )
-        stored = b"".join(rows[r] for r in order)
-        gif = _make_gif([(w, h, stored)], _PALETTE4, interlace_first=True)
-        d = decode_gif(gif)
-        assert d["pixels"] == _rgb(b"".join(rows))
-
-    def test_gif_counts_frames_and_skips_extensions(self):
-        from indian_address_parser_spark.operators.multimodal import decode_gif
-
-        f1 = bytes([0, 1, 2, 3])
-        f2 = bytes([3, 2, 1, 0])
-        gif = bytearray(_make_gif([(2, 2, f1), (2, 2, f2)], _PALETTE4))
-        # splice a graphic-control extension before the first image block
-        img_at = gif.index(b"\x2c")
-        gce = b"\x21\xf9\x04\x00\x0a\x00\x00\x00"
-        gif = bytes(gif[:img_at]) + gce + bytes(gif[img_at:])
-        d = decode_gif(gif)
-        assert d["n_frames"] == 2
-        assert d["pixels"] == _rgb(f1)  # first frame decoded, second counted
-
-    def test_gif_bomb_guard(self):
-        import struct
-
-        from indian_address_parser_spark.operators.multimodal import (
-            _GIF_MAX_PIXELS,
-            decode_gif,
-        )
-
-        gif = bytearray(_make_gif([(2, 2, bytes([0, 1, 2, 3]))], _PALETTE4))
-        # forge the image descriptor to claim a giant frame
-        img_at = gif.index(b"\x2c")
-        gif[img_at + 5 : img_at + 9] = struct.pack("<HH", 65535, 65535)
-        with pytest.raises(ValueError, match="cap"):
-            decode_gif(bytes(gif))
-        assert 65535 * 65535 > _GIF_MAX_PIXELS
-
-    def test_gif_property_roundtrip(self):
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-
-        from indian_address_parser_spark.operators.multimodal import decode_gif
-
-        @settings(max_examples=25, deadline=None)
-        @given(data=st.data())
-        def check(data):
-            w = data.draw(st.integers(1, 12))
-            h = data.draw(st.integers(1, 12))
-            n_colors = data.draw(st.integers(2, 4))
-            idx = bytes(
-                data.draw(
-                    st.lists(
-                        st.integers(0, n_colors - 1),
-                        min_size=w * h,
-                        max_size=w * h,
-                    )
-                )
-            )
-            palette = _PALETTE4[: 3 * n_colors]
-            d = decode_gif(_make_gif([(w, h, idx)], palette))
-            assert (d["width"], d["height"]) == (w, h)
-            assert d["pixels"] == _rgb(idx, palette)
-
-        check()
-
-    def test_gif_through_mapinpandas(self, spark):
-        idx = bytes([0, 1, 2, 3])
-        gif = _make_gif([(2, 2, idx)], _PALETTE4)
-        df = spark.createDataFrame([("g1", bytearray(gif))], ["url", "html"])
-        row = decode_features(df).collect()[0]
-        assert row["modality"] == "image" and row["decode_error"] is None
-        assert (row["width"], row["height"], row["channels"]) == (2, 2, 3)
-
-
 # --- MP3: synthetic CBR/VBR frame streams -----------------------------------
 
 
@@ -736,12 +528,13 @@ class TestMp3Decode:
         assert row["n_samples"] == 2 * 1152
 
 
-# --- minimal baseline JPEG ENCODER (test-only; the exact inverse of
-# decode_jpeg's pipeline: RGB→YCbCr → optional box-mean chroma downsample →
-# 8×8 forward DCT → quantize → zigzag → Huffman RLE with byte stuffing).
-# Huffman tables are a small custom canonical spec (12 DC categories at
-# 4 bits, all 162 baseline AC symbols at 8 bits) shared with the DHT
-# segment, so the decoder exercises its real table-building path. ---
+        assert row["n_samples"] == 2 * 1152
+
+
+# --- minimal baseline JPEG ENCODER (test-only): RGB→YCbCr → optional
+# box-mean chroma downsample → 8×8 forward DCT → quantize → zigzag →
+# Huffman RLE with byte stuffing, so the frame-header walk runs over a
+# complete file (DQT/DHT segments around the SOF). ---
 
 _SPARK_KITTEN = (
     "/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/kittens/DP153539.jpg"
@@ -828,9 +621,11 @@ def _make_jpeg(img, samp=None, restart=0, qval=1):
     x = np.arange(8).reshape(1, 8)
     C = np.cos((2 * x + 1) * u * np.pi / 16) * np.sqrt(2.0 / 8)
     C[0, :] = np.sqrt(1.0 / 8)
-    from indian_address_parser_spark.operators.multimodal import _JPEG_ZIGZAG
-
-    zig = np.asarray(_JPEG_ZIGZAG)
+    # zigzag position k → row-major index: walk the anti-diagonals, up-right
+    # on even ones (x ascending), down-left on odd ones (y ascending)
+    zig = np.asarray(
+        sorted(range(64), key=lambda i: (i // 8 + i % 8, (i % 8, i // 8)[(i // 8 + i % 8) % 2]))
+    )
     dc_spec, ac_spec = _jpeg_huffspec()
     dc_codes = _jpeg_huff_codes(*dc_spec)
     ac_codes = _jpeg_huff_codes(*ac_spec)
@@ -904,194 +699,6 @@ def _make_jpeg(img, samp=None, restart=0, qval=1):
     out += bw.out + b"\xff\xd9"
     return bytes(out)
 
-
-class TestJpegDecode:
-    def _rand_img(self, h, w, ch, seed):
-        import numpy as np
-
-        rng = np.random.default_rng(seed)
-        shape = (h, w) if ch == 1 else (h, w, 3)
-        return rng.integers(0, 256, size=shape, dtype=np.uint8)
-
-    def test_grayscale_roundtrip_near_exact(self):
-        """quant=1 grayscale: the only loss is forward/inverse DCT float
-        rounding — every sample within ±2 of the original."""
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import decode_jpeg
-
-        img = self._rand_img(17, 24, 1, seed=7)
-        d = decode_jpeg(_make_jpeg(img))
-        assert (d["width"], d["height"], d["channels"]) == (24, 17, 1)
-        got = np.frombuffer(d["pixels"], dtype=np.uint8).reshape(17, 24)
-        assert int(np.abs(got.astype(int) - img.astype(int)).max()) <= 2
-
-    def test_rgb_444_roundtrip(self):
-        """4:4:4 RGB at quant=1: color-convert + DCT rounding only."""
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import decode_jpeg
-
-        img = self._rand_img(21, 19, 3, seed=11)
-        d = decode_jpeg(_make_jpeg(img))
-        assert (d["width"], d["height"], d["channels"]) == (19, 21, 3)
-        got = np.frombuffer(d["pixels"], dtype=np.uint8).reshape(21, 19, 3)
-        assert int(np.abs(got.astype(int) - img.astype(int)).max()) <= 4
-
-    def test_420_subsampled_gradient(self):
-        """2x2-subsampled chroma on a smooth gradient with odd dimensions:
-        exercises MCU padding, box-mean downsample (encoder) vs nearest-
-        neighbor upsample (decoder), and the final crop."""
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import decode_jpeg
-
-        h, w = 29, 35
-        yy, xx = np.mgrid[0:h, 0:w]
-        img = np.stack(
-            [(yy * 4) % 256, (xx * 4) % 256, ((yy + xx) * 2) % 256], axis=-1
-        ).astype(np.uint8)
-        d = decode_jpeg(_make_jpeg(img, samp=[(2, 2), (1, 1), (1, 1)]))
-        assert (d["width"], d["height"], d["channels"]) == (w, h, 3)
-        got = np.frombuffer(d["pixels"], dtype=np.uint8).reshape(h, w, 3)
-        err = np.abs(got.astype(int) - img.astype(int))
-        assert float(err.mean()) < 4.0
-        assert int(err.max()) <= 24  # chroma NN-upsample bound on this gradient
-
-    def test_restart_markers_identical_output(self):
-        """DRI + RSTn segmentation must not change a single pixel."""
-        from indian_address_parser_spark.operators.multimodal import decode_jpeg
-
-        img = self._rand_img(24, 40, 3, seed=3)
-        plain = decode_jpeg(_make_jpeg(img))
-        with_rst = decode_jpeg(_make_jpeg(img, restart=2))
-        assert plain == with_rst
-
-    def test_16bit_quant_table(self):
-        """qval=300 forces the Pq=1 (16-bit DQT) path; a constant-color
-        image reconstructs within the DC quantization error bound."""
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import decode_jpeg
-
-        img = np.full((16, 16), 77, dtype=np.uint8)
-        d = decode_jpeg(_make_jpeg(img, qval=300))
-        got = np.frombuffer(d["pixels"], dtype=np.uint8)
-        assert int(np.abs(got.astype(int) - 77).max()) <= 300 / 2 / 8 + 1
-
-    def test_real_spark_sample_jpeg(self):
-        """A real 4:2:0 photograph from the public Spark distribution
-        decodes to its marker-declared dimensions with plausible content
-        (non-degenerate variance, photographic mean)."""
-        import os
-
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import decode_jpeg
-
-        if not os.path.exists(_SPARK_KITTEN):
-            pytest.skip("Spark sample images not present")
-        d = decode_jpeg(open(_SPARK_KITTEN, "rb").read())
-        assert (d["width"], d["height"], d["channels"]) == (300, 296, 3)
-        a = np.frombuffer(d["pixels"], dtype=np.uint8).reshape(296, 300, 3)
-        assert 30 < float(a.mean()) < 225 and float(a.std()) > 10
-
-    def test_progressive_and_truncated_raise(self):
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import decode_jpeg
-
-        good = _make_jpeg(self._rand_img(8, 8, 1, seed=1))
-        with pytest.raises(NotImplementedError, match="progressive"):
-            decode_jpeg(good.replace(b"\xff\xc0", b"\xff\xc2", 1))
-        with pytest.raises(ValueError):
-            decode_jpeg(good[: len(good) // 2])  # mid-entropy truncation
-        with pytest.raises(ValueError, match="cap"):
-            # forged SOF dimensions past the pixel cap
-            import struct
-
-            sof_at = good.index(b"\xff\xc0")
-            forged = bytearray(good)
-            forged[sof_at + 5 : sof_at + 9] = struct.pack(">HH", 65000, 65000)
-            decode_jpeg(bytes(forged))
-
-
-class TestResizeImages:
-    def test_encode_png_roundtrip(self):
-        from indian_address_parser_spark.operators.multimodal import (
-            decode_png,
-            encode_png,
-        )
-
-        px = bytes(range(120))  # 8×5 RGB
-        d = decode_png(encode_png(8, 5, 3, px))
-        assert (d["width"], d["height"], d["channels"], d["pixels"]) == (8, 5, 3, px)
-
-    def test_bilinear_linear_ramp_exact(self):
-        """Bilinear interpolation of a linear ramp reproduces the ramp
-        (within ±1 rounding) — the defining property of the kernel."""
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import _resize_kernel
-
-        ramp = np.tile(
-            np.linspace(0, 255, 64)[None, :, None], (16, 1, 1)
-        ).astype(np.uint8)
-        r = _resize_kernel(ramp, 8, 32, "bilinear")
-        src_x = (np.arange(32) + 0.5) * 2 - 0.5
-        expected = np.interp(src_x, np.arange(64), ramp[0, :, 0].astype(float))
-        assert float(np.abs(r[0, :, 0].astype(float) - expected).max()) <= 1.0
-
-    def test_nearest_preserves_palette(self):
-        """Nearest-neighbor introduces no new sample values."""
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import _resize_kernel
-
-        rng = np.random.default_rng(5)
-        img = rng.choice(np.array([0, 85, 170, 255], dtype=np.uint8), size=(13, 9, 3))
-        out = _resize_kernel(img, 5, 4, "nearest")
-        assert set(np.unique(out)) <= {0, 85, 170, 255}
-
-    def test_resize_images_through_mapinpandas(self, spark):
-        """PNG + real JPEG + corrupt + non-image through the operator:
-        aspect preserved, no upscaling, output decodable as PNG."""
-        import os
-
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import (
-            decode_png,
-            resize_images,
-        )
-
-        big = np.indices((40, 64)).sum(0).astype(np.uint8)  # 64×40 gray PNG
-        rows = [
-            ("png_big", bytearray(_make_png([big[y].tobytes() for y in range(40)], channels=1))),
-            ("png_small", bytearray(_make_png([bytes([1, 2]), bytes([3, 4])], channels=1))),
-            ("not_image", bytearray(b"<html>hi</html>")),
-            ("corrupt", bytearray(b"\x89PNG\r\n" + b"x" * 32)),
-        ]
-        if os.path.exists(_SPARK_KITTEN):
-            rows.append(("kitten", bytearray(open(_SPARK_KITTEN, "rb").read())))
-        df = spark.createDataFrame(rows, ["url", "html"]).repartition(3)
-        out = {r["url"]: r for r in resize_images(df, max_side=32).collect()}
-        assert len(out) == len(rows)
-        b = out["png_big"]
-        assert (b["src_width"], b["src_height"]) == (64, 40)
-        assert (b["width"], b["height"]) == (32, 20)  # aspect preserved
-        d = decode_png(bytes(b["png"]))
-        assert (d["width"], d["height"], d["channels"]) == (32, 20, 1)
-        s = out["png_small"]  # 2×2 stays 2×2: never upscale
-        assert (s["width"], s["height"]) == (2, 2)
-        assert out["not_image"]["decode_error"] and out["not_image"]["png"] is None
-        assert out["corrupt"]["decode_error"] is not None
-        if "kitten" in out:
-            k = out["kitten"]
-            assert (k["src_width"], k["src_height"]) == (300, 296)
-            assert (k["width"], k["height"]) == (32, 32)  # 300/296 ≈ square
-            kd = decode_png(bytes(k["png"]))
-            assert kd["channels"] == 3
 
 
 # --- in-test EBML writer (the independent encode half for decode_webm) ---
@@ -1192,10 +799,8 @@ class TestProgressiveJpegMetadata:
         """Progressive JPEG (SOF2): pixel decode needs libjpeg, but the
         metadata path reads the true dimensions from the frame header —
         verified against a real progressive file from this box's public
-        nodejs docs. resize (pixel-consuming) still surfaces the gap."""
+        nodejs docs."""
         import os
-
-        from indian_address_parser_spark.operators.multimodal import resize_images
 
         prog = "/usr/share/doc/nodejs/full-white-stripe.jpg"
         if not os.path.exists(prog):
@@ -1206,8 +811,6 @@ class TestProgressiveJpegMetadata:
         row = decode_features(df).collect()[0]
         assert row["decode_error"] is None
         assert (row["width"], row["height"], row["channels"]) == (493, 312, 3)
-        rrow = resize_images(df).collect()[0]
-        assert rrow["decode_error"] and "progressive" in rrow["decode_error"]
 
     def test_synthetic_sof2_dims(self):
         from indian_address_parser_spark.operators.multimodal import _decode_image
@@ -1221,94 +824,3 @@ class TestProgressiveJpegMetadata:
         d = _decode_image(prog, "jpeg")
         assert (d["width"], d["height"], d["channels"]) == (14, 10, 1)
 
-
-class TestImagePhash:
-    @pytest.fixture(scope="class")
-    def kitten_arr(self):
-        import os
-
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import decode_jpeg
-
-        if not os.path.exists(_SPARK_KITTEN):
-            pytest.skip("Spark sample images not present")
-        d = decode_jpeg(open(_SPARK_KITTEN, "rb").read())
-        return np.frombuffer(d["pixels"], np.uint8).reshape(
-            d["height"], d["width"], 3
-        )
-
-    def test_phash_invariance_and_separation(self, kitten_arr):
-        """Same image downscaled 40% and JPEG-re-encoded at coarse quant:
-        ≤4 bits moved. A different photograph: ≥16 bits (random ≈ 32)."""
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import (
-            _resize_kernel,
-            decode_jpeg,
-            phash64,
-        )
-
-        def ham(x, y):
-            return bin((x ^ y) & ((1 << 64) - 1)).count("1")
-
-        h0 = phash64(kitten_arr)
-        small = _resize_kernel(
-            kitten_arr, int(kitten_arr.shape[0] * 0.6), int(kitten_arr.shape[1] * 0.6), "bilinear"
-        )
-        assert ham(h0, phash64(small)) <= 4
-        reenc = decode_jpeg(_make_jpeg(kitten_arr, qval=16))
-        rearr = np.frombuffer(reenc["pixels"], np.uint8).reshape(kitten_arr.shape)
-        assert ham(h0, phash64(rearr)) <= 4
-        other = decode_jpeg(
-            open(
-                "/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/"
-                "multi-channel/chr30.4.184.jpg",
-                "rb",
-            ).read()
-        )
-        oarr = np.frombuffer(other["pixels"], np.uint8).reshape(
-            other["height"], other["width"], 3
-        )
-        assert ham(h0, phash64(oarr)) >= 16
-
-    def test_phash_dedup_end_to_end(self, spark, kitten_arr):
-        """image_phash + banded-Hamming pairs find the planted near-dup
-        (same kitten, 60% size, PNG vs JPEG container) and nothing else;
-        the pair stage is pure JVM (no Python nodes, no cartesian)."""
-        import numpy as np
-
-        from indian_address_parser_spark.operators.multimodal import (
-            _resize_kernel,
-            encode_png,
-            image_phash,
-            phash_dup_pairs,
-        )
-
-        small = _resize_kernel(kitten_arr, 178, 180, "bilinear")
-        rng = np.random.default_rng(9)
-        noise = rng.integers(0, 256, (64, 64, 3), dtype=np.uint8)
-        df = spark.createDataFrame(
-            [
-                ("kitten_jpg", bytearray(open(_SPARK_KITTEN, "rb").read())),
-                ("kitten_small_png", bytearray(encode_png(180, 178, 3, small.tobytes()))),
-                ("noise_png", bytearray(encode_png(64, 64, 3, noise.tobytes()))),
-                ("html", bytearray(b"<html>x</html>")),
-            ],
-            ["url", "html"],
-        ).repartition(2)
-        hashed = image_phash(df)
-        rows = {r["url"]: r for r in hashed.collect()}
-        assert rows["html"]["decode_error"] is not None
-        assert all(
-            rows[u]["phash"] is not None
-            for u in ("kitten_jpg", "kitten_small_png", "noise_png")
-        )
-        pairs_df = phash_dup_pairs(
-            hashed.where(F.col("phash").isNotNull()), max_hamming=3, n_bands=4
-        )
-        plan = pairs_df._jdf.queryExecution().toString()
-        assert "CartesianProduct" not in plan
-        pairs = {(r["url_a"], r["url_b"]): r["hamming"] for r in pairs_df.collect()}
-        assert set(pairs) == {("kitten_jpg", "kitten_small_png")}
-        assert pairs[("kitten_jpg", "kitten_small_png")] <= 3

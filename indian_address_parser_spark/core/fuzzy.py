@@ -16,9 +16,6 @@
 
 from __future__ import annotations
 
-import re
-from functools import lru_cache
-
 
 def lcs_len(a: str, b: str) -> int:
     """Length of the longest common subsequence.
@@ -235,15 +232,3 @@ def soundex(text: str) -> str:
         else:
             prev_code = ''
     return (''.join(out) + '000')[:4]
-
-
-_DIGIT_RUNS = re.compile(r'\d+')
-
-
-@lru_cache(maxsize=65536)
-def digit_signature(text: str) -> str:
-    """Concatenated digit runs, '/'-separated — the numeric identity of an
-    address component ('HOUSE NO 45/2' → '45/2'). Used as a hard feature in
-    pair scoring: two mentions of one household share digit signatures even
-    when surface forms differ."""
-    return '/'.join(_DIGIT_RUNS.findall(text))

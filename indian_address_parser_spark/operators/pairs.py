@@ -1,11 +1,11 @@
 """Candidate pair generation: self-join within blocks.
 
 ``blocked ⋈ blocked ON join_key AND id_a < id_b`` — a shuffled self-join on
-the blocking key. AQE + skew-join handle residual partition skew; the
-quadratic-block problem is already handled upstream (secondary keys in
-``blocking.with_block_key``). Mentions whose key carries no information
-(empty pincode AND city AND locality) are excluded — they would form one
-giant junk block.
+the blocking key; each pair carries its primary ``block_key``. AQE +
+skew-join handle residual partition skew; the quadratic-block problem is
+already handled upstream (secondary keys in ``blocking.with_block_key``).
+Mentions whose key carries no information (empty pincode AND city AND
+locality) are excluded — they would form one giant junk block.
 """
 
 from __future__ import annotations
@@ -49,15 +49,17 @@ BLOCK_INPUT_COLS = ("mention_id", "normalized") + RAW_FIELDS
 
 
 def candidate_pairs(blocked: DataFrame) -> DataFrame:
-    """→ one row per unordered candidate pair with both sides' fields."""
+    """→ one row per unordered candidate pair with both sides' fields and
+    the pair's primary ``block_key``.
+
+    The pair joins on ``join_key``, which refines ``block_key``, so both
+    sides share the ``block_key`` one side carries."""
     usable = blocked.where("block_key != '||'")
 
     cols = ["mention_id", "join_key", *PAIR_FIELDS]
-    left = usable.selectExpr(*[f"{c} AS {c}_a" for c in cols])
+    left = usable.selectExpr("block_key", *[f"{c} AS {c}_a" for c in cols])
     right = usable.selectExpr(*[f"{c} AS {c}_b" for c in cols])
 
-    return (
-        left.join(right, F.expr("join_key_a = join_key_b AND mention_id_a < mention_id_b"))
-        .drop("join_key_b")
-        .withColumnRenamed("join_key_a", "join_key")
-    )
+    return left.join(
+        right, F.expr("join_key_a = join_key_b AND mention_id_a < mention_id_b")
+    ).drop("join_key_a", "join_key_b")

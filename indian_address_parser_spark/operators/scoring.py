@@ -84,19 +84,20 @@ def _weight(field: str, weight: float) -> str:
     )
 
 
-def _edges(scored: DataFrame, threshold: float, key: list[str]) -> DataFrame:
-    """→ edges(src, dst, score[, join_key]) of the pairs scoring ≥ threshold."""
+def _edges(scored: DataFrame, threshold: float) -> DataFrame:
+    """→ edges(src, dst, score, block_key) of the pairs scoring ≥ threshold."""
     return scored.where(f"score >= {float(threshold)!r}D").selectExpr(
-        "mention_id_a AS src", "mention_id_b AS dst", "round(score, 6) AS score", *key
+        "mention_id_a AS src", "mention_id_b AS dst", "round(score, 6) AS score", "block_key"
     )
 
 
 def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
-    """→ edges(src, dst, score[, join_key]) for pairs scoring ≥ threshold.
+    """→ edges(src, dst, score, block_key) for pairs scoring ≥ threshold.
 
-    ``join_key`` is passed through when the pair frame carries it (as
-    ``candidate_pairs`` output does): it is what makes the edges key-local
-    for ``cc.block_local_components``.
+    ``pairs`` carries the pair's primary ``block_key`` (``candidate_pairs``
+    emits it; the incremental attach joins on it), which is passed through:
+    both endpoints of every edge share it, so ``cc.block_local_components``
+    partitions the edges by it.
 
     Two-stage plan when Jaro-Winkler fields are enabled:
       1. JVM stage (whole-stage codegen, inside the pair-join stage): the
@@ -125,7 +126,6 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
     partial_sim = " + ".join(_lev_term(f, w, g) for f, w, g in jvm_fields) or "0.0D"
     total_weight = " + ".join(_weight(f, w) for f, w, _, _ in FIELD_WEIGHTS)
 
-    key = ["join_key"] if "join_key" in pairs.columns else []
     if not jw_fields:
         scored = pairs.withColumn(
             "score",
@@ -134,7 +134,7 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
                 f" THEN ({partial_sim}) / ({total_weight}) ELSE 0.0D END"
             ),
         )
-        return _edges(scored, threshold, key)
+        return _edges(scored, threshold)
 
     # guard booleans resolved JVM-side so only the raw strings cross the wire
     narrow_cols = [
@@ -142,7 +142,7 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
         "mention_id_b",
         f"{partial_sim} AS partial_sim",
         f"{total_weight} AS total_weight",
-        *key,
+        "block_key",
     ]
     for f, _, guarded in jw_fields:
         ok = f"{f}_a IS NOT NULL AND {f}_b IS NOT NULL"
@@ -168,4 +168,4 @@ def score_pairs(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
             F.lit(0.0)
         ),
     )
-    return _edges(scored, threshold, key)
+    return _edges(scored, threshold)

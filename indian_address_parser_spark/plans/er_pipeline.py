@@ -4,13 +4,14 @@ Stage graph (SURVEY.md §3.4):
 
   pages ─extract(mapInPandas)→ mentions  [ckpt 1, narrow]
         ─block keys (+skew split)→ blocked [ckpt 2, one agg]
-        ─self-join→ pairs ─score→ edges   [ckpt 3, the big shuffle]
-        ─by join_key→ union-find→ clusters [ckpt 4, one exchange]
+        ─self-join on join_key→ pairs ─score→ edges(+block_key) [ckpt 3, the big shuffle]
+        ─by block_key→ union-find→ clusters [ckpt 4, one exchange]
 
-Clustering is block-local: every edge joins two mentions of one
-``join_key`` and every mention has one key, so no component crosses a key
-group and ``cc.block_local_components`` labels them with one exchange and
-a per-partition union-find — no iterated star rounds.
+Clustering is block-local: pairs join on ``join_key``, which refines the
+primary ``block_key``, so every edge joins two mentions of one primary
+block and no component crosses a block. ``cc.block_local_components``
+labels them with one exchange by ``block_key`` and a per-partition
+union-find — no iterated star rounds.
 
 Each stage writes parquet plus a ``_manifest.json`` (stage name, format
 version, input fingerprint, schema, row count, counters). ``run_pipeline``
@@ -53,9 +54,10 @@ STAGES = ("mentions", "blocked", "edges", "clusters")
 # Bump a stage's version whenever the columns it writes change. A manifest
 # with another version — or with none, written before versions were
 # recorded, which counts as 1 — does not validate, so an old work dir
-# recomputes that stage. edges 2: carries ``join_key``, which the
-# block-local clusters stage partitions by.
-STAGE_VERSIONS = {"mentions": 1, "blocked": 1, "edges": 2, "clusters": 1}
+# recomputes that stage. edges 3: carries the pair's primary ``block_key``
+# (version 2 carried ``join_key``), which the block-local clusters stage
+# partitions by.
+STAGE_VERSIONS = {"mentions": 1, "blocked": 1, "edges": 3, "clusters": 1}
 
 
 def _manifest_path(root: str, stage: str) -> str:

@@ -235,7 +235,7 @@ def _scored_pairs(spark, sf_dir) -> DataFrame:
     # JW pass at sf0.1; fanned out it is sub-second). Same lesson, same
     # shape as operators/scoring.py's documented narrow exchange.
     p = p.select(
-        "id_a", "id_b", *[F.col(f"{c}_{s}") for c in cols for s in ("a", "b")]
+        "id_a", "id_b", "block_key", *[F.col(f"{c}_{s}") for c in cols for s in ("a", "b")]
     ).repartition(p.sparkSession.sparkContext.defaultParallelism)
 
     def lev_sim(x, y):
@@ -248,28 +248,31 @@ def _scored_pairs(spark, sf_dir) -> DataFrame:
         + 0.2 * lev_sim(F.col("city_a"), F.col("city_b"))
         + 0.1 * F.when(F.col("pincode_a") == F.col("pincode_b"), 1.0).otherwise(0.0)
     )
-    return p.select("id_a", "id_b", F.round(score, 6).alias("score"))
+    return p.select("id_a", "id_b", F.round(score, 6).alias("score"), "block_key")
 
 
 def q_er_pair_scores(spark, sf_dir):
-    return _scored_pairs(spark, sf_dir)
+    return _scored_pairs(spark, sf_dir).select("id_a", "id_b", "score")
 
 
 def q_er_edges(spark, sf_dir):
-    return _scored_pairs(spark, sf_dir).where(F.col("score") >= SCORE_THRESHOLD)
+    return q_er_pair_scores(spark, sf_dir).where(F.col("score") >= SCORE_THRESHOLD)
 
 
 def q_er_clusters(spark, sf_dir):
-    from indian_address_parser_spark.operators.cc import connected_components
+    """Both ends of every edge share its ``block_key`` (the pairs join on
+    it), so CC is the block-local union-find (operators/cc.py)."""
+    from indian_address_parser_spark.operators.cc import block_local_components
 
     # zero-pad ids: CC compares lexicographically, the oracle numerically
     pad = lambda c: F.lpad(c.cast("string"), 12, "0")  # noqa: E731
-    edges = q_er_edges(spark, sf_dir).select(
+    edges = _scored_pairs(spark, sf_dir).where(F.col("score") >= SCORE_THRESHOLD).select(
         pad(F.col("id_a")).alias("src"),
         pad(F.col("id_b")).alias("dst"),
+        "block_key",
     )
     nodes = _docs(spark, sf_dir).select(pad(F.col("doc_id")).alias("mention_id"))
-    asn = connected_components(edges)
+    asn = block_local_components(edges)
     out = nodes.join(asn, "mention_id", "left")
     return out.select(
         F.col("mention_id").cast("bigint").alias("doc_id"),
@@ -320,7 +323,7 @@ def _pipeline_clusters(spark):
 
     Shared by the oracled cluster-size projection below AND the rows-only
     ``er_pipeline_full`` driver entry (__spark_entry__.py) — one wiring,
-    one fixture size. The edges carry their ``join_key``, so CC is the
+    one fixture size. The edges carry their ``block_key``, so CC is the
     block-local union-find the batch pipeline uses (operators/cc.py)."""
     from indian_address_parser_spark.operators.blocking import with_block_key
     from indian_address_parser_spark.operators.cc import (
@@ -1516,7 +1519,7 @@ def q_dedup_canonical_keep(spark, sf_dir):
     decision table over the corpus. Composes the oracled band-pair
     generator with the oracled CC operator, so the whole decision chain is
     hash-gated; at crawl scale every piece is the bucketed/skew-safe shape
-    (no all-pairs, partial-agg labeling, collision-audited keys)."""
+    (no all-pairs, join-star rounds past the giant-degree guard)."""
     from indian_address_parser_spark.operators.cc import connected_components
 
     pairs = q_dedup_minhash128_band_pairs(spark, sf_dir)
@@ -1885,7 +1888,7 @@ def q_corpus_decontaminate(
     driver-OOM cliff when someone points the query at a 10⁸-shingle
     suite. Past ``broadcast_max_shingles`` it degrades automatically to
     the shuffled semi-join (same rows, one corpus-side exchange) — the
-    same gate-don't-assume pattern as the CC collision audit. The count
+    same gate-don't-assume pattern as CC's giant-degree guard. The count
     itself is one agg over the SMALL side only; the per-doc verdict is
     then one distinct + one left join on doc_id."""
     sh = _shingles(spark, sf_dir)

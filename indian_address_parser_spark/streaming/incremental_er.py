@@ -51,11 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from indian_address_parser_spark.operators.blocking import with_block_key
-from indian_address_parser_spark.operators.cc import (
-    attach_clusters,
-    block_local_components,
-    connected_components,
-)
+from indian_address_parser_spark.operators.cc import attach_clusters, block_local_components
 from indian_address_parser_spark.operators.extract import extract_mentions
 from indian_address_parser_spark.operators.pairs import (
     BLOCK_INPUT_COLS,
@@ -227,15 +223,25 @@ def reconcile(
     run scopes its own recall (the documented secondary-split tradeoff);
     reconcile keeps every merge either run found — recall ≥ batch.
 
+    Why block-local CC is exact here: ``block_key`` is a pure function of
+    a mention's fields, so a mention has the same primary block in its
+    micro-batch and in the union, and every edge either run scores stays
+    inside one primary block (batch and bridge pairs join on ``join_key``,
+    which refines ``block_key``; attach joins on ``block_key``). So every
+    incremental cluster, and with it every assignment edge, lies in one
+    primary block, even where a block's secondary split differs between a
+    batch and the union. Bridge edges carry their pair's ``block_key``;
+    an assignment edge takes its mention's ``block_key`` from the
+    re-blocked union. An assigned mention missing from the mention store
+    has no block to take: the job that reads the result fails rather than
+    leave the mention a silent singleton.
+
     Scale shape: the cross-cluster filter is two shuffled equi-joins on
     mention_id that run BEFORE the Python Jaro-Winkler kernel, so after a
     healthy incremental run the Arrow UDF sees only the thin cross-batch
     boundary set, not the full pair stream. Everything else is the exact
-    batch operator chain (blocking agg+join, pruned self-join), except CC:
-    the assignment edges come from each batch's own blocking (attach joins
-    on ``block_key``, and a block's split state can differ between a batch
-    and the union), so they can cross the union's join keys and the graph
-    needs star CC, not the batch pipeline's block-local union-find.
+    batch operator chain (blocking agg+join, pruned self-join, block-local
+    union-find); the returned frame is lazy.
     """
     mentions = spark.read.parquet(mentions_dir).dropDuplicates(["mention_id"])
     assigns = (
@@ -243,7 +249,8 @@ def reconcile(
         .select("mention_id", "cluster_id")
         .distinct()
     )
-    pairs = candidate_pairs(with_block_key(mentions))
+    blocked = with_block_key(mentions)
+    pairs = candidate_pairs(blocked)
     cl_a = assigns.select(
         F.col("mention_id").alias("mention_id_a"), F.col("cluster_id").alias("_cl_a")
     )
@@ -256,9 +263,16 @@ def reconcile(
         .where(F.col("_cl_a") != F.col("_cl_b"))
         .drop("_cl_a", "_cl_b")
     )
-    bridge = score_pairs(cross, threshold=threshold).select("src", "dst")
-    assign_edges = assigns.where(
-        F.col("mention_id") != F.col("cluster_id")
-    ).select(F.col("mention_id").alias("src"), F.col("cluster_id").alias("dst"))
-    merged = connected_components(bridge.unionByName(assign_edges))
+    bridge = score_pairs(cross, threshold=threshold).select("src", "dst", "block_key")
+    assign_edges = (
+        assigns.where(F.col("mention_id") != F.col("cluster_id"))
+        .join(blocked.select("mention_id", "block_key"), "mention_id", "left")
+        .selectExpr(
+            "mention_id AS src",
+            "cluster_id AS dst",
+            "coalesce(block_key, raise_error(concat('assigned mention ', mention_id,"
+            " ' is missing from the mention store'))) AS block_key",
+        )
+    )
+    merged = block_local_components(bridge.unionByName(assign_edges))
     return attach_clusters(assigns.select("mention_id"), merged)

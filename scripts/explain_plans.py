@@ -2,13 +2,18 @@
 
 Checks the properties the plans must have at scale and records them for
 review: column pruning of the binary html column, whole-stage codegen
-around scoring, AQE shuffle handling on the pair join, and the absence of
-Python evaluation nodes in the JVM-only stages.
+around scoring, AQE shuffle handling on the pair join, the absence of
+Python evaluation nodes in the JVM-only stages, and the block-local
+union-find under ER clustering. Expression ids are written as ``#N``,
+the data and temp dirs as ``<sf_dir>`` and ``<reconcile_dir>``.
+
+    python scripts/explain_plans.py   # from the repository root
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -97,29 +102,15 @@ def main() -> None:
     # r4 contracts -------------------------------------------------------
     sf = "/root/testdata/sf0.001"
 
-    # CC label step follows the loop's skew posture: partial-agg + join
-    # under the giant-component guard, single-exchange window otherwise
-    from indian_address_parser_spark.operators import cc
+    # ER connected components are block-local: the er_clusters query and
+    # the incremental reconcile label through the union-find MapInPandas,
+    # not the iterated star loop (which would leave only a checkpoint scan)
+    from indian_address_parser_spark.queries import q_er_clusters
 
-    cc_edges = spark.createDataFrame(
-        [(f"n{(i * 13) % 60}", f"n{(i * 29 + 7) % 60}") for i in range(45)],
-        ["src", "dst"],
-    )
-    giant_log: list = []
-    orig_giant = cc._GIANT_DEGREE
-    cc._GIANT_DEGREE = 2
-    try:
-        cc.connected_components(cc_edges, _explain_log=giant_log).count()
-    finally:
-        cc._GIANT_DEGREE = orig_giant
-    plan = giant_log[0]
-    sections.append(f"## CC label step, giant posture (full queryExecution)\n\n```\n{plan}\n```\n")
-    checks.append(("CC label (giant)", "does NOT contain 'Window'", "Window" not in plan))
-    checks.append(("CC label (giant)", "contains 'Aggregate'", "Aggregate" in plan))
-    bounded_log: list = []
-    cc.connected_components(cc_edges, _explain_log=bounded_log).count()
-    checks.append(
-        ("CC label (bounded)", "contains 'Window' (1-exchange path)", "Window" in bounded_log[0])
+    capture(
+        "er_clusters (block-local union-find)",
+        q_er_clusters(spark, sf),
+        must_contain=("MapInPandas",),
     )
 
     # learned-IVF assignment: one narrow Arrow pass, no exchange
@@ -183,8 +174,6 @@ def main() -> None:
         q_events_sessionize(spark, sf),
         must_not=("Python",),
     )
-    import re
-
     checks.append(
         (
             "batch sessionization (single user_id shuffle)",
@@ -254,15 +243,11 @@ def main() -> None:
                 rpages.where(half == i), i, f"{base}/state", f"{base}/assign",
                 mentions_dir=f"{base}/mentions",
             )
-        rec = reconcile(spark, f"{base}/mentions", f"{base}/assign")
-        # NOTE: not capture() — connected_components already executed its
-        # star rounds at construction; explain the assembled frame only
-        rec_plan = rec._jdf.queryExecution().sparkPlan().toString()
-        sections.append(
-            "## incremental-ER reconcile (cross-cluster prune below the "
-            f"Arrow kernel)\n\n```\n{rec_plan}\n```\n"
+        capture(
+            "incremental-ER reconcile (block-local union-find)",
+            reconcile(spark, f"{base}/mentions", f"{base}/assign"),
+            must_contain=("MapInPandas",),
         )
-        bridge_plan = None
         # the bridge-edge subplan is where the prune matters; re-derive it
         from indian_address_parser_spark.operators.blocking import (
             with_block_key as _wbk,
@@ -324,6 +309,13 @@ def main() -> None:
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
+    # expression ids (#123) and the temp dir change with every run, and the
+    # data dir with the host; masked, the recorded plans diff only where
+    # the plans do
+    sections = [
+        re.sub(r"#\d+", "#N", sec).replace(base, "<reconcile_dir>").replace(sf, "<sf_dir>")
+        for sec in sections
+    ]
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/PLANS.md", "w") as f:
         f.write("# Physical plans of the core operators\n\n")

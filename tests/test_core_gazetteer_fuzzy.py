@@ -99,10 +99,3 @@ class TestJaroWinklerVsDuckDB:
                 "select jaro_winkler_similarity(?, ?)", [a, b]
             ).fetchone()[0]
             assert abs(fuzzy.jaro_winkler(a, b) - expected) < 1e-9, (a, b)
-
-
-class TestDigitSignature:
-    def test_basic(self):
-        assert fuzzy.digit_signature("HOUSE NO 45/2") == "45/2"
-        assert fuzzy.digit_signature("GALI NO. 7") == "7"
-        assert fuzzy.digit_signature("NO DIGITS") == ""

@@ -1,9 +1,5 @@
 """Smoke tests for the driver contract (__spark_entry__)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entrymod
 
 

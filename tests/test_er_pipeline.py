@@ -136,55 +136,73 @@ class TestPipeline:
         third = run_pipeline(spark, fixture["pages"], wd)
         assert third["resumed"] == list(("mentions", "blocked", "edges", "clusters"))
 
-    def test_resume_recomputes_edges_written_without_join_key(self, spark, fixture, tmp_path):
-        """A work dir whose ``edges`` stage predates the ``join_key``
-        column (its manifest predates format versions) must recompute that
-        stage — not resume it and crash the block-local clusters stage
-        that needs the key."""
+    def test_resume_recomputes_edges_written_without_block_key(self, spark, fixture, tmp_path):
+        """A work dir whose ``edges`` stage was written at version 2, keyed
+        by ``join_key`` and without the ``block_key`` column, must
+        recompute that stage — not resume it and crash the block-local
+        clusters stage that partitions by ``block_key``."""
         wd = str(tmp_path / "old_edges")
         run_pipeline(spark, fixture["pages"], wd)
         want = spark.read.parquet(os.path.join(wd, "clusters")).select(
             "mention_id", "cluster_id"
         ).collect()
-        # rewrite edges as the earlier code wrote it: (src, dst, score)
-        # and a manifest without a version; crash before clusters
+        # rewrite edges as version 2 wrote them: (src, dst, score, join_key)
+        # under a version-2 manifest; crash before clusters
         edges_dir = os.path.join(wd, "edges")
-        old = spark.read.parquet(edges_dir).select("src", "dst", "score")
+        blocked = spark.read.parquet(os.path.join(wd, "blocked")).select(
+            F.col("mention_id").alias("src"), "join_key"
+        )
+        old = spark.read.parquet(edges_dir).join(blocked, "src").select(
+            "src", "dst", "score", "join_key"
+        )
         old.write.mode("overwrite").parquet(edges_dir + "_old")
         with open(os.path.join(edges_dir, "_manifest.json")) as f:
             manifest = json.load(f)
-        del manifest["version"]
-        spark.read.parquet(edges_dir + "_old").write.mode("overwrite").parquet(edges_dir)
+        manifest["version"] = 2
+        old_read = spark.read.parquet(edges_dir + "_old")
+        manifest["schema"] = old_read.schema.jsonValue()
+        old_read.write.mode("overwrite").parquet(edges_dir)
         with open(os.path.join(edges_dir, "_manifest.json"), "w") as f:
             json.dump(manifest, f)
         os.remove(os.path.join(wd, "clusters", "_manifest.json"))
 
         report = run_pipeline(spark, fixture["pages"], wd)
         assert report["resumed"] == ["mentions", "blocked"]
-        assert "join_key" in spark.read.parquet(edges_dir).columns
+        assert "block_key" in spark.read.parquet(edges_dir).columns
         got = spark.read.parquet(os.path.join(wd, "clusters")).select(
             "mention_id", "cluster_id"
         ).collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     def test_edges_are_key_local(self, spark, fixture, tmp_path):
-        """The structural fact block-local CC rests on: every edge's two
-        endpoints carry that edge's ``join_key`` in the blocked stage."""
+        """The structural fact block-local CC rests on: both endpoints of
+        every edge carry that edge's ``block_key`` in the blocked stage,
+        and share one ``join_key`` there (the key the pair joined on)."""
         wd = str(tmp_path / "key_local")
-        run_pipeline(spark, fixture["pages"], wd)
+        run_pipeline(spark, fixture["pages"], wd, max_block_size=10)
         edges = spark.read.parquet(os.path.join(wd, "edges"))
-        blocked = spark.read.parquet(os.path.join(wd, "blocked")).select(
-            "mention_id", F.col("join_key").alias("node_key")
-        )
+        blocked = spark.read.parquet(os.path.join(wd, "blocked"))
         assert edges.count() > 0
         for side in ("src", "dst"):
-            keyed = edges.join(
-                blocked.withColumnRenamed("mention_id", side), side, "left"
+            edges = edges.join(
+                blocked.select(
+                    F.col("mention_id").alias(side),
+                    F.col("block_key").alias(f"{side}_block"),
+                    F.col("join_key").alias(f"{side}_join"),
+                ),
+                side,
+                "left",
             )
-            stray = keyed.where(
-                F.col("node_key").isNull() | (F.col("node_key") != F.col("join_key"))
-            )
-            assert stray.isEmpty(), stray.limit(5).collect()
+        stray = edges.where(
+            F.col("src_block").isNull()
+            | F.col("dst_block").isNull()
+            | (F.col("src_block") != F.col("block_key"))
+            | (F.col("dst_block") != F.col("block_key"))
+            | (F.col("src_join") != F.col("dst_join"))
+        )
+        assert stray.isEmpty(), stray.limit(5).collect()
+        # the small cap splits blocks, so join_key is finer than block_key
+        assert edges.where(F.col("src_join") != F.col("block_key")).count() > 0
 
     def test_manifests_match_written_stages(self, spark, fixture, tmp_path):
         """The row count and counters observed in each stage's write job
@@ -298,7 +316,7 @@ class TestScoringFormula:
         monkeypatch.setattr(
             scoring,
             "_edges",
-            lambda scored, threshold, key: scored.selectExpr(
+            lambda scored, threshold: scored.selectExpr(
                 "mention_id_a AS src", "mention_id_b AS dst", "score"
             ),
         )
@@ -404,7 +422,7 @@ class TestSkewHandling:
 
 
 class TestConnectedComponents:
-    # _GIANT_DEGREE = 0 puts every round and the label step on join stars
+    # _GIANT_DEGREE = 0 puts every round on join stars
     @pytest.mark.parametrize("giant_degree", [1_000_000, 0], ids=["window", "join"])
     def test_matches_bruteforce_on_random_graph(self, spark, monkeypatch, giant_degree):
         from indian_address_parser_spark.operators import cc as cc_mod
@@ -505,31 +523,6 @@ class TestConnectedComponents:
         got = {r["mention_id"]: r["cluster_id"] for r in out.collect()}
         assert got == {"a": "a", "b": "a", "c": "c"}
 
-    def test_label_step_follows_skew_posture(self, spark, monkeypatch):
-        """The final labeling must match the star loop's skew posture
-        (VERDICT r3 #1): under the giant-component posture it is
-        partial-agg + join — window partitions are not skew-splittable,
-        so a giant component would serialize onto one task exactly when
-        the join-star guard fires. With bounded components the cheap
-        single-exchange window is used instead (the r4 scaling run
-        measured always-agg+join as a −8% efficiency tax on the link
-        stage)."""
-        from indian_address_parser_spark.operators import cc as cc_mod
-
-        edges = [(f"n{(i * 13) % 60}", f"n{(i * 29 + 7) % 60}") for i in range(45)]
-        df = spark.createDataFrame(edges, ["src", "dst"])
-        bounded_log: list = []
-        b = connected_components(df, _explain_log=bounded_log).collect()
-        giant_log: list = []
-        monkeypatch.setattr(cc_mod, "_GIANT_DEGREE", 2)
-        a = connected_components(df, _explain_log=giant_log).collect()
-        assert giant_log, "explain hook did not fire"
-        assert "Window" not in giant_log[0], giant_log[0]
-        assert "Aggregate" in giant_log[0]
-        assert "Window" in bounded_log[0], bounded_log[0]
-        # both postures label identically
-        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
 
 def _bruteforce_clusters(edges):
     """Union-find reference labeling: {node: min(component)}."""
@@ -553,7 +546,7 @@ def _bruteforce_clusters(edges):
 
 
 def _keyed_edges(seed, n_keys, max_nodes, max_edges):
-    """Seeded random key-local edge set: (src, dst, join_key) rows whose
+    """Seeded random key-local edge set: (src, dst, block_key) rows whose
     endpoints are two distinct nodes of their key's pool (pair edges have
     no self-loops)."""
     import random
@@ -571,9 +564,9 @@ class TestBlockLocalComponents:
     """``block_local_components`` must equal a union-find over the same
     edges whenever the edges are key-local — the ER path's graph shape."""
 
-    def _labels(self, spark, rows, partitions):
-        df = spark.createDataFrame(rows, "src string, dst string, join_key string")
-        out = block_local_components(df.repartition(partitions))
+    def _labels(self, spark, rows, partitions, cc=block_local_components):
+        df = spark.createDataFrame(rows, "src string, dst string, block_key string")
+        out = cc(df.repartition(partitions))
         got = {r["mention_id"]: r["cluster_id"] for r in out.collect()}
         assert len(got) == out.count()  # one row per node
         return got
@@ -596,7 +589,7 @@ class TestBlockLocalComponents:
         schema = pa.schema([("mention_id", pa.string()), ("cluster_id", pa.string())])
         assert pa.Table.from_pandas(empty, schema=schema, preserve_index=False).num_rows == 0
 
-        df = spark.createDataFrame([], "src string, dst string, join_key string")
+        df = spark.createDataFrame([], "src string, dst string, block_key string")
         out = block_local_components(df.repartition(4))
         assert out.dtypes == [("mention_id", "string"), ("cluster_id", "string")]
         assert out.count() == 0
@@ -611,11 +604,13 @@ class TestBlockLocalComponents:
         assert got == {m: "m000" for m in nodes}
 
     def test_devanagari_ids_use_spark_string_order(self, spark):
-        """Labels are chosen by Python ``str`` order inside the union-find;
-        it must agree with Spark's binary ``min`` on the same ids for
-        non-ASCII url paths: all-Devanagari, Devanagari against Latin-1,
-        and a BMP character against a supplementary one (where UTF-16
-        order would disagree with UTF-8 byte order)."""
+        """Labels are chosen by Python ``str`` order inside the union-find
+        and by the string-keyed star loop's own ``least``; both must agree
+        with Spark's binary ``min`` on the same ids for non-ASCII url
+        paths: all-Devanagari, Devanagari against Latin-1, and a BMP
+        character against a supplementary one (where UTF-16 order would
+        disagree with UTF-8 byte order). Both implementations run here,
+        in one test."""
         components = [
             ["लाजपत-नगर", "नई-दिल्ली", "दिल्ली"],
             ["ज़िला", "é"],
@@ -626,88 +621,24 @@ class TestBlockLocalComponents:
         for c, paths in enumerate(components):
             ids = [f"https://x.example.in/{p}#0" for p in paths]
             rows += [(a, b, f"k{c}") for a, b in zip(ids, ids[1:])]
-        got = self._labels(spark, rows, partitions=2)
-        assert got == _bruteforce_clusters([(a, b) for a, b, _ in rows])
-        spark_min = (
-            spark.createDataFrame(list(got.items()), ["mention_id", "cluster_id"])
-            .groupBy("cluster_id")
-            .agg(F.min("mention_id").alias("m"))
-            .collect()
-        )
-        assert len(spark_min) == len(components)
-        assert all(r["m"] == r["cluster_id"] for r in spark_min), spark_min
-
-
-class TestHashCollisionGuard:
-    """The CC loop runs on xxhash64 keys; at 10^12 nodes n²/2⁶⁴ collisions
-    become real merges. The runtime audit must detect a collided key space
-    and fall back to string keys (correct output)."""
-
-    EDGES = [(f"n{(i * 13) % 60}", f"n{(i * 29 + 7) % 60}") for i in range(45)]
-
-    def test_forced_collision_fallback_matches_bruteforce(self, spark, monkeypatch):
-        from indian_address_parser_spark.operators import cc as cc_mod
-
-        # collapse the key space to ≤4 values: guaranteed collisions, and
-        # any loop run on these keys would merge unrelated components
-        monkeypatch.setattr(cc_mod, "_hash_id", lambda col: F.xxhash64(col) % 4)
-        monkeypatch.setattr(cc_mod, "_AUDIT_MIN_NODES", 0)
-        df = spark.createDataFrame(self.EDGES, ["src", "dst"])
-        got = {
-            r["mention_id"]: r["cluster_id"]
-            for r in cc_mod.connected_components(df).collect()
-        }
-        assert got == _bruteforce_clusters(self.EDGES)
-
-    def test_audit_gated_by_node_count(self, spark, monkeypatch):
-        """Below ``_AUDIT_MIN_NODES`` (10⁸ — P(collision) ≤ 2.7e-4) the
-        audit must not run at all: a force-collided key space then runs
-        the loop on the collided keys and merges unrelated components.
-        With the gate at 0 the same input is audited and labels correctly.
-        The gate is what keeps small-graph CC at the r3 job structure."""
-        from indian_address_parser_spark.operators import cc as cc_mod
-
-        monkeypatch.setattr(cc_mod, "_hash_id", lambda col: F.xxhash64(col) % 4)
-        df = spark.createDataFrame(self.EDGES, ["src", "dst"])
-        want = _bruteforce_clusters(self.EDGES)
-
-        def labels():
-            return {
-                r["mention_id"]: r["cluster_id"]
-                for r in cc_mod.connected_components(df).collect()
-            }
-
-        assert labels() != want  # the audit never ran at 60 nodes
-        monkeypatch.setattr(cc_mod, "_AUDIT_MIN_NODES", 0)
-        assert labels() == want
-
-    def test_clean_hash_space_stays_on_hash_path(self, spark, monkeypatch):
-        """No collision → the (cheap) hash path must be used, not the
-        fallback: instrument _hash_id and count invocations."""
-        from indian_address_parser_spark.operators import cc as cc_mod
-
-        calls = []
-        real = cc_mod._hash_id
-        monkeypatch.setattr(
-            cc_mod, "_hash_id", lambda col: calls.append(1) or real(col)
-        )
-        monkeypatch.setattr(cc_mod, "_AUDIT_MIN_NODES", 0)
-        df = spark.createDataFrame(self.EDGES, ["src", "dst"])
-        got = {
-            r["mention_id"]: r["cluster_id"]
-            for r in cc_mod.connected_components(df).collect()
-        }
-        assert got == _bruteforce_clusters(self.EDGES)
-        # nodes build (1) + initial edge keying (2) = 3 calls; the string
-        # fallback would have rebuilt nodes WITHOUT calling _hash_id again
-        assert len(calls) == 3, calls
+        for cc in (block_local_components, connected_components):
+            got = self._labels(spark, rows, partitions=2, cc=cc)
+            assert got == _bruteforce_clusters([(a, b) for a, b, _ in rows]), cc
+            spark_min = (
+                spark.createDataFrame(list(got.items()), ["mention_id", "cluster_id"])
+                .groupBy("cluster_id")
+                .agg(F.min("mention_id").alias("m"))
+                .collect()
+            )
+            assert len(spark_min) == len(components), cc
+            assert all(r["m"] == r["cluster_id"] for r in spark_min), (cc, spark_min)
 
 
 class TestMegaComponentEndToEnd:
     def test_full_pipeline_survives_giant_cluster(self, spark, tmp_path):
         """A mega-component runs through the COMPLETE pipeline — extract →
         block → score → block-local CC → attach: 120 identical pages are one
-        join key, one 7,140-edge clique, and must come out as ONE cluster
+        primary block, one 7,140-edge clique, and must come out as ONE cluster
         of all 120 mentions labelled by the minimum mention id."""
         addr = "H.NO 12, GALI NO 4, LAJPAT NAGAR, NEW DELHI 110024"
         pages = spark.createDataFrame(
@@ -717,7 +648,7 @@ class TestMegaComponentEndToEnd:
         run_pipeline(spark, pages, str(tmp_path / "mega"))
         edges = spark.read.parquet(str(tmp_path / "mega" / "edges"))
         assert edges.count() == 120 * 119 // 2
-        assert edges.select("join_key").distinct().count() == 1
+        assert edges.select("block_key").distinct().count() == 1
         clusters = spark.read.parquet(str(tmp_path / "mega" / "clusters"))
         sizes = clusters.groupBy("cluster_id").count().collect()
         assert len(sizes) == 1 and sizes[0]["count"] == 120, sizes

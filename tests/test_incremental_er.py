@@ -245,3 +245,86 @@ class TestReconcile:
         process_batch(pages.where(F.col("url") == "u3"), 1, state, asg, mentions_dir=men)
         merged = _partition(reconcile(spark, men, asg))
         assert merged == {frozenset({"u1#0", "u2#0", "u3#0"})}
+
+    def test_reconcile_block_straddling_split_threshold(self, spark, tmp_path):
+        """One primary block holds ≤ 200 mentions in each micro-batch but
+        > 200 in their union, so each batch pairs it whole while the union
+        splits it by the secondary key. Reconcile's block-local CC must
+        still give the star-CC batch partition — including the bridge
+        fixture's first-rep-wins divergence, which sits in the same block."""
+        from indian_address_parser_spark.operators.blocking import with_block_key
+        from indian_address_parser_spark.operators.extract import extract_mentions
+        from indian_address_parser_spark.streaming.incremental_er import (
+            process_batch,
+            reconcile,
+        )
+
+        # 110 two-page households in the bridge pages' block
+        # (110041|NEW DELHI|R252); house numbers differ, so no two
+        # households can score past the threshold
+        households = [
+            (f"h{i:03d}{v}", f"H.NO {100 + i}, GALI NO {i % 9}, RAJ NAGAR, NEW DELHI 110041")
+            for i in range(110)
+            for v in "ab"
+        ]
+        pages = _pages_df(spark, households + _BRIDGE_PAGES)
+        in_b1 = F.col("url").endswith("b") | (F.col("url") == "u3")
+        batches = [pages.where(~in_b1), pages.where(in_b1)]
+
+        def max_block(df):
+            return with_block_key(extract_mentions(df)).agg(F.max("block_size")).first()[0]
+
+        assert all(max_block(b) <= 200 for b in batches)
+        assert max_block(pages) > 200
+
+        state, asg, men = (
+            str(tmp_path / "state"),
+            str(tmp_path / "assign"),
+            str(tmp_path / "mentions"),
+        )
+        for i, b in enumerate(batches):
+            process_batch(b, i, state, asg, mentions_dir=men)
+        incr = _partition(
+            spark.read.parquet(asg).select("mention_id", "cluster_id").distinct()
+        )
+        batch = _batch_partition(spark, pages)
+        assert incr != batch  # the bridge divergence is there to repair
+        assert frozenset({"u1#0", "u2#0", "u3#0"}) in batch
+        # at this size AQE would coalesce the union-find exchange into one
+        # partition, where any key is exact; keep all shuffle partitions
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            merged = _partition(reconcile(spark, men, asg))
+        finally:
+            spark.conf.set(key, old)
+        assert merged == batch
+
+    def test_reconcile_raises_on_assigned_mention_missing_from_store(
+        self, spark, tmp_path
+    ):
+        """An assignment edge takes its block from the mention store; a
+        mention assigned to another mention's cluster but absent from the
+        store must fail the job, not come out as a silent singleton."""
+        from pyspark.errors import SparkRuntimeException
+
+        from indian_address_parser_spark.streaming.incremental_er import (
+            process_batch,
+            reconcile,
+        )
+
+        pages = _pages_df(spark, [_BRIDGE_PAGES[0], _BRIDGE_PAGES[2]])
+        state, asg, men = (
+            str(tmp_path / "state"),
+            str(tmp_path / "assign"),
+            str(tmp_path / "mentions"),
+        )
+        process_batch(pages.where(F.col("url") == "u1"), 0, state, asg, mentions_dir=men)
+        process_batch(pages.where(F.col("url") == "u3"), 1, state, asg, mentions_dir=men)
+        # u3 attached to u1's cluster; drop u3 from a copy of the store
+        lossy = str(tmp_path / "mentions_lossy")
+        spark.read.parquet(men).where(F.col("mention_id") != "u3#0").write.parquet(lossy)
+        assert _partition(reconcile(spark, men, asg)) == {frozenset({"u1#0", "u3#0"})}
+        with pytest.raises(SparkRuntimeException, match="u3#0 is missing from the mention store"):
+            reconcile(spark, lossy, asg).collect()

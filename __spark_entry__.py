@@ -35,7 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: end-to-end entity-resolution clusters at sf0.001."""
-    from indian_address_parser_spark.queries import q_er_clusters
+    from indian_address_parser_spark.queries.er import q_er_clusters
 
     return q_er_clusters(spark, "/root/testdata/sf0.001")
 
@@ -44,9 +44,9 @@ def _er_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only: the real pipeline on the deterministic synthetic pages
     fixture — mapInPandas rules extraction (reference-parity), soundex
     blocking with skew splitting, weighted JW/Lev scoring, block-local CC. Same
-    wiring as the oracled cluster-size projection (queries.py
-    _pipeline_clusters)."""
-    from indian_address_parser_spark.queries import _pipeline_clusters
+    wiring as the oracled cluster-size projection
+    (queries/er.py _pipeline_clusters)."""
+    from indian_address_parser_spark.queries.er import _pipeline_clusters
 
     return _pipeline_clusters(spark).select("mention_id", "cluster_id")
 
@@ -54,7 +54,7 @@ def _er_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _er_extract_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only: full reference-parity extraction (E1+E2+R1-R8) over the
     synthetic pages fixture, flattened mention fields."""
-    from indian_address_parser_spark.queries import _pipeline_mentions
+    from indian_address_parser_spark.queries.er import _pipeline_mentions
 
     return _pipeline_mentions(spark).select(
         "mention_id", "normalized", "house_no", "street", "locality",
@@ -114,7 +114,7 @@ def _er_bertcrf_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from indian_address_parser_spark.operators.tagger import tag_texts
-    from indian_address_parser_spark.queries import q_er_synth_addr
+    from indian_address_parser_spark.queries.er import q_er_synth_addr
 
     def _factory():
         # built lazily INSIDE the worker process: the seeded build is
@@ -153,7 +153,7 @@ def _oracle_er_bertcrf_tag(sf_dir: str) -> str:
     from indian_address_parser_spark.core import refine
     from indian_address_parser_spark.core.parse import preprocess
     from indian_address_parser_spark.operators.tagger import BertCrfTagger
-    from indian_address_parser_spark.queries import addr_sql
+    from indian_address_parser_spark.queries._common import addr_sql
 
     con = duckdb.connect()
     texts = [

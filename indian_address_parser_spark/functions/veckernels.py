@@ -44,7 +44,11 @@ __all__ = [
     "brute_topk_candidates",
     "attach_pair_cos",
     "plane_band_signature",
+    "lsh_planes",
 ]
+
+N_PLANES = 16  # random-hyperplane LSH: 16 sign bits in 2 bands of 8
+EMB_DIM = 64
 
 
 def read_emb_matrix(sf_dir: str) -> tuple[np.ndarray, np.ndarray]:
@@ -178,13 +182,25 @@ def attach_pair_cos(spark, sf_dir: str, pairs: DataFrame) -> DataFrame:
     return pairs.select("id_a", "id_b").mapInPandas(kernel, _PAIR_SCHEMA)
 
 
+def lsh_planes(n_planes: int = N_PLANES, dim: int = EMB_DIM) -> list[list[float]]:
+    """Deterministic ±1 hyperplanes from md5 parity — both engines consume
+    the SAME literal matrix, so the signatures agree by construction."""
+    import hashlib
+
+    return [
+        [
+            1.0 if int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[0], 16) >= 8 else -1.0
+            for d in range(dim)
+        ]
+        for p in range(n_planes)
+    ]
+
+
 def plane_band_signature(spark, sf_dir: str, queries_df: DataFrame) -> DataFrame:
     """(vec_id) → (vec_id, band0, band1): the 16 random-hyperplane sign
     bits packed into two 8-bit band ints. Same ±1 plane literals, same
     dim-sequential dot, same ``dot >= 0`` decision as the JVM HOF plan —
     the sign bits are computed on bit-identical doubles."""
-    from indian_address_parser_spark.queries import lsh_planes
-
     planes = np.asarray(lsh_planes(), dtype=np.float64)
     bc = _broadcast_emb(spark, sf_dir, with_norms=False)
     schema = T.StructType(

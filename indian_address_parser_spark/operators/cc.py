@@ -13,7 +13,7 @@ interchangeable wherever both apply.
   then span two primary blocks, so one exchange of the edges by
   ``block_key`` followed by a per-partition union-find is exact. Callers:
   the batch pipeline (``plans/er_pipeline.py``), the oracled pipeline
-  projection (``queries._pipeline_clusters``), ``q_er_clusters``, and
+  projection (``queries.er._pipeline_clusters``), ``q_er_clusters``, and
   ``streaming/incremental_er``'s intra-batch step and ``reconcile``. A
   union-find task holds whole primary blocks: its size is bounded by the
   edge count of the largest primary block after the secondary split, not

@@ -69,12 +69,17 @@ REP_COLS = ("cluster_id", "block_key", *PAIR_FIELDS)
 
 
 def _read_reps(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    try:
-        reps = spark.read.parquet(state_dir)
-    except Exception:  # first batch: no state written yet
+    """The representative table, or None before the first batch wrote it.
+
+    Absence is tested with the Hadoop ``FileSystem`` of ``state_dir``
+    (local and object-store URIs alike) rather than by catching a failed
+    read, so a state table that exists but cannot be read raises."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(state_dir)
+    if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
         return None
     # replay tolerance: duplicate appends collapse to one row per cluster
-    return reps.dropDuplicates(["cluster_id"])
+    return spark.read.parquet(state_dir).dropDuplicates(["cluster_id"])
 
 
 def _attach_to_reps(

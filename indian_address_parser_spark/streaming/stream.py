@@ -13,17 +13,15 @@ stateless per row. Two streaming operators are provided:
   dedup correctly and old state never accumulates.
 
 Incremental clustering (streaming CC) is intentionally NOT implemented as a
-stream: connected components is a global fixpoint; the scalable production
-shape is micro-batch incremental linking via ``foreachBatch`` into the
-checkpointed batch pipeline (resume logic in plans/er_pipeline.py), which
-``foreach_batch_link`` wires up.
+stream: connected components is a global fixpoint. Micro-batch
+incremental ER runs through ``foreachBatch`` instead, in
+``streaming/incremental_er.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
 
 from indian_address_parser_spark.functions.udfs import make_mention_extractor, mention_schema
@@ -56,145 +54,3 @@ def stream_dedup_mentions(mentions_stream: DataFrame, late_window: str = "1 hour
     return mentions_stream.withWatermark("warc_ts", late_window).dropDuplicatesWithinWatermark(
         ["mention_id"]
     )
-
-
-def stream_windowed_counts(
-    mentions_stream: DataFrame,
-    window: str = "10 minutes",
-    late_window: str = "1 hour",
-    key: str = "pincode",
-) -> DataFrame:
-    """Windowed mention counts per blocking component with late-data handling.
-
-    Watermark on ``warc_ts`` + tumbling event-time window: late pages inside
-    ``late_window`` still land in their original window; older windows are
-    finalized and their state purged — the standard Structured Streaming
-    shape for per-period crawl observability (mentions per pincode per
-    window feeds the skew monitor that sizes secondary blocking keys).
-    """
-    return (
-        mentions_stream.withWatermark("warc_ts", late_window)
-        .groupBy(F.window("warc_ts", window).alias("w"), F.col(key))
-        .agg(F.count("*").alias("n_mentions"))
-        .select(F.col("w.start").alias("window_start"), key, "n_mentions")
-    )
-
-
-# output/state schemas for stream_url_sessions (applyInPandasWithState)
-_SESSION_OUTPUT = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("n_mentions", T.LongType()),
-        T.StructField("first_ts", T.TimestampType()),
-        T.StructField("last_ts", T.TimestampType()),
-        T.StructField("closed", T.BooleanType()),
-    ]
-)
-_SESSION_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("first_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-    ]
-)
-
-
-def stream_url_sessions(
-    mentions_stream: DataFrame,
-    session_timeout: str | None = "30 minutes",
-    late_window: str = "1 hour",
-) -> DataFrame:
-    """Custom stateful operator: per-url crawl session accumulator.
-
-    ``applyInPandasWithState`` keeps one tiny state row per url (running
-    mention count + first/last event time) and emits the updated session
-    row every micro-batch (update mode, ``closed=false``). This is the
-    engine's template for stateful ops Structured Streaming lacks natively
-    — per-entity accumulators, incremental block statistics — with state
-    partitioned by the group key, so it shards across executors like any
-    keyed state.
-
-    State is bounded the same way dedup bounds its seen-set: a watermark on
-    ``warc_ts`` (``late_window``) plus ``GroupStateTimeout.EventTimeTimeout``
-    — once the watermark passes a url's last event by ``session_timeout``,
-    the final session row is emitted with ``closed=true`` and the state row
-    is REMOVED, so state is O(urls inside the timeout horizon), not
-    O(distinct urls ever seen). A url seen again later starts a fresh
-    session. Pass ``session_timeout=None`` for the unbounded accumulator
-    (finite backfills only — never on a live crawl).
-    """
-    bounded = session_timeout is not None
-    if bounded:
-        import pandas as pd
-
-        timeout_ms = int(pd.Timedelta(session_timeout).total_seconds() * 1000)
-
-    def _update(key, pdfs, state):
-        import pandas as pd
-
-        def _emit(n, first_us, last_us, closed):
-            return pd.DataFrame(
-                {
-                    "url": [key[0]],
-                    "n_mentions": [n],
-                    "first_ts": [pd.Timestamp(first_us, unit="us")],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                    "closed": [closed],
-                }
-            )
-
-        if bounded and state.hasTimedOut:
-            n, first_us, last_us = state.get
-            state.remove()
-            yield _emit(n, first_us, last_us, True)
-            return
-
-        n, first_us, last_us = state.get if state.exists else (0, None, None)
-        for pdf in pdfs:
-            ts = pd.to_datetime(pdf["warc_ts"])
-            n += len(pdf)
-            lo = int(ts.min().value // 1000)
-            hi = int(ts.max().value // 1000)
-            first_us = lo if first_us is None else min(first_us, lo)
-            last_us = hi if last_us is None else max(last_us, hi)
-        state.update((n, first_us, last_us))
-        if bounded:
-            # fire once the watermark passes last event + timeout; the
-            # timestamp must sit above the current watermark or Spark
-            # rejects it, hence the max()
-            state.setTimeoutTimestamp(
-                max(last_us // 1000 + timeout_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        yield _emit(n, first_us, last_us, False)
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    src = (
-        mentions_stream.withWatermark("warc_ts", late_window)
-        if bounded
-        else mentions_stream
-    )
-    return src.groupBy("url").applyInPandasWithState(
-        _update,
-        outputStructType=_SESSION_OUTPUT,
-        stateStructType=_SESSION_STATE,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if bounded
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-def foreach_batch_link(work_dir: str, threshold: float = 0.80):
-    """ForeachBatch sink: feed each micro-batch of mentions into the
-    checkpointed batch linker (blocking → scoring → CC over the union of
-    all mentions seen so far, resumable via stage manifests)."""
-    import os
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        path = os.path.join(work_dir, "mentions_stream")
-        batch_df.drop("warc_ts").write.mode("append").parquet(path)
-
-    return _sink

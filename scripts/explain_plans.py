@@ -58,17 +58,6 @@ def main() -> None:
         must_not=("html",),
     )
 
-    # multimodal: binary columns dominate bytes at crawl scale, so the
-    # docstring claim "prunes to (key, binary) before the UDF" must hold in
-    # the plan — the scan reads ONLY url+html, never text/lang/warc_ts
-    from indian_address_parser_spark.operators.multimodal import decode_features
-
-    capture(
-        "multimodal decode_features (pruned binary scan → MapInPandas)",
-        decode_features(pages),
-        must_contain=("ReadSchema: struct<url:string,html:binary>", "MapInPandas"),
-        must_not=("text:string", "warc_ts"),
-    )
     capture(
         "blocking + candidate self-join + scoring (edges)",
         edges,
@@ -105,7 +94,7 @@ def main() -> None:
     # ER connected components are block-local: the er_clusters query and
     # the incremental reconcile label through the union-find MapInPandas,
     # not the iterated star loop (which would leave only a checkpoint scan)
-    from indian_address_parser_spark.queries import q_er_clusters
+    from indian_address_parser_spark.queries.er import q_er_clusters
 
     capture(
         "er_clusters (block-local union-find)",
@@ -114,8 +103,8 @@ def main() -> None:
     )
 
     # learned-IVF assignment: one narrow Arrow pass, no exchange
-    from indian_address_parser_spark.queries import (
-        _emb_double,
+    from indian_address_parser_spark.queries._common import _emb_double
+    from indian_address_parser_spark.queries.sim import (
         ivf_assign_cells,
         ivf_nprobe_for,
         train_ivf_centroids,
@@ -131,7 +120,7 @@ def main() -> None:
     )
 
     # TPC-H Q5 shape: broadcast dims, no cartesian fallback
-    from indian_address_parser_spark.queries import q_join_regional_revenue
+    from indian_address_parser_spark.queries.relational import q_join_regional_revenue
 
     capture(
         "regional revenue 6-table join (broadcast dims)",
@@ -141,7 +130,7 @@ def main() -> None:
     )
 
     # as-of join: union-and-carry — sort-based, zero join nodes, no Python
-    from indian_address_parser_spark.queries import q_join_asof_events
+    from indian_address_parser_spark.queries.relational import q_join_asof_events
 
     capture(
         "as-of join (union-and-carry, no range join)",
@@ -167,7 +156,7 @@ def main() -> None:
     )
 
     # sessionization: lag + running sum + groupBy all on ONE user_id shuffle
-    from indian_address_parser_spark.queries import q_events_sessionize
+    from indian_address_parser_spark.queries.relational import q_events_sessionize
 
     sess_plan = capture(
         "batch sessionization (single user_id shuffle)",
@@ -185,7 +174,7 @@ def main() -> None:
     )
 
     # decontamination: eval shingle vocab broadcast into a semi-join
-    from indian_address_parser_spark.queries import q_corpus_decontaminate
+    from indian_address_parser_spark.queries.train import q_corpus_decontaminate
 
     capture(
         "corpus decontamination (broadcast eval-shingle semi-join)",

@@ -5,7 +5,8 @@ Settles bench-variance questions the way sim_cosine_topk was settled in r3
 that warms the Python workers with an untimed er_normalize pass, then times
 q_er_clusters at sf0.1; samples alternate across the given repo checkouts so
 host-noise episodes hit every version equally; single-thread cal_mops before
-and after each sample detects co-tenant steal.
+and after each sample detects co-tenant steal. Every checkout must have
+the ``queries/`` package (the ER queries live in ``queries/er.py``).
 
 Usage:
   git worktree add /tmp/wt_r3 <r3-sha>
@@ -33,7 +34,7 @@ def spin_mops(n=20_000_000):
 
 cal0 = spin_mops()
 from indian_address_parser_spark.plans.session import get_spark
-from indian_address_parser_spark import queries as Q
+from indian_address_parser_spark.queries import er as Q
 spark = get_spark(app_name="interleave-er-clusters")
 sf = "/root/testdata/sf0.1"
 Q.q_er_normalize(spark, sf).count()  # warm JVM + Python workers, untimed

@@ -21,7 +21,7 @@ def test_simhash_banded_pairs_complete(spark):
     """Pigeonhole guarantee: hamming ≤ 3 over 4 bands of 16 bits ⇒ at least
     one band identical — the band-bucket join must find EVERY such pair
     (verified against brute-force all-pairs hamming)."""
-    from indian_address_parser_spark.queries import q_dedup_simhash64, q_dedup_simhash_pairs
+    from indian_address_parser_spark.queries.dedup import q_dedup_simhash64, q_dedup_simhash_pairs
 
     sig = {
         r["doc_id"]: (r["b0"], r["b1"], r["b2"], r["b3"])
@@ -43,7 +43,7 @@ def test_minhash128_catches_high_jaccard_pairs(spark):
     """Every pair with true 3-gram jaccard ≥ 0.8 must surface from the
     128-perm/32-band LSH (P[miss] = (1-j^4)^32 ≤ 2e-7 at j=0.8; the hashes
     are deterministic so this is a stable regression, not a flaky one)."""
-    from indian_address_parser_spark.queries import (
+    from indian_address_parser_spark.queries.dedup import (
         q_dedup_minhash128_band_pairs,
         q_dedup_ngram_jaccard,
     )
@@ -65,7 +65,7 @@ def test_dfcap_jaccard_is_lower_bound(spark):
     """The df-capped jaccard never exceeds the uncapped one and agrees
     exactly when no shingle hits the cap (the sf0.001 fixture's max df is
     far below DF_CAP, so here the outputs must be identical)."""
-    from indian_address_parser_spark.queries import (
+    from indian_address_parser_spark.queries.dedup import (
         q_dedup_ngram_jaccard,
         q_dedup_ngram_jaccard_dfcap,
     )
@@ -90,7 +90,8 @@ def test_lsh_finds_planted_near_duplicates(spark):
     top-k to surface the planted twin as the top match for ≥ 90% of them."""
     import numpy as np
 
-    from indian_address_parser_spark.queries import _emb_double, lsh_topk
+    from indian_address_parser_spark.queries._common import _emb_double
+    from indian_address_parser_spark.queries.sim import lsh_topk
 
     base = _emb_double(spark, SF_DIR).collect()
     rng = np.random.default_rng(3)
@@ -113,9 +114,10 @@ def test_lsh_finds_planted_near_duplicates(spark):
 def test_lsh_prunes_candidate_space(spark):
     """The point of the LSH path: the candidate pair space must be a small
     fraction of n² (the brute-force baseline touches all ~250k pairs)."""
-    from indian_address_parser_spark.queries import _emb_double, lsh_planes
-
     import pyspark.sql.functions as F
+
+    from indian_address_parser_spark.functions.veckernels import lsh_planes
+    from indian_address_parser_spark.queries._common import _emb_double
 
     e = _emb_double(spark, SF_DIR)
     n = e.count()
@@ -139,11 +141,9 @@ def test_lsh_prunes_candidate_space(spark):
 
 def test_lsh_candidates_share_a_band(spark):
     """Every emitted LSH pair must actually share a band signature."""
-    from indian_address_parser_spark.queries import (
-        lsh_planes,
-        q_sim_lsh_topk,
-    )
-    from indian_address_parser_spark.queries import _emb_double  # noqa: PLC2701
+    from indian_address_parser_spark.functions.veckernels import lsh_planes
+    from indian_address_parser_spark.queries._common import _emb_double
+    from indian_address_parser_spark.queries.sim import q_sim_lsh_topk
 
     planes = lsh_planes()
     vecs = {r["vec_id"]: r["v"] for r in _emb_double(spark, SF_DIR).collect()}
@@ -176,8 +176,8 @@ def test_embedding_cosine_dedup_production_radius(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from indian_address_parser_spark.queries import (
-        EMB_DIM,
+    from indian_address_parser_spark.functions.veckernels import EMB_DIM
+    from indian_address_parser_spark.queries.dedup import (
         _oracle_embedding_cosine,
         q_dedup_embedding_cosine,
     )
@@ -242,7 +242,7 @@ def test_minhash_xxhash_variant_matches_md5_semantics(spark):
     identical signatures (all bands collide in both), and every true
     near-dup pair (jaccard ≥ 0.75: surfacing probability 1-(1-j^4)^32 >
     0.9999) is found by BOTH variants on the fixture."""
-    from indian_address_parser_spark.queries import (
+    from indian_address_parser_spark.queries.dedup import (
         q_dedup_minhash128_band_pairs,
         q_dedup_minhash128_xxhash_band_pairs,
         q_dedup_ngram_jaccard,
@@ -267,7 +267,7 @@ def test_minhash_xxhash_variant_matches_md5_semantics(spark):
 
 
 def test_ivf_kmeans_trainer_deterministic_and_unit():
-    from indian_address_parser_spark.queries import (
+    from indian_address_parser_spark.queries.sim import (
         _ivf_table_rows,
         ivf_cells_for,
         train_ivf_centroids,
@@ -293,8 +293,8 @@ def test_ivf_assignment_is_narrow_and_matches_explode_form(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from indian_address_parser_spark.queries import (
-        _emb_double,
+    from indian_address_parser_spark.queries._common import _emb_double
+    from indian_address_parser_spark.queries.sim import (
         ivf_assign_cells,
         ivf_nprobe_for,
         train_ivf_centroids,
@@ -342,7 +342,7 @@ def test_ivf_kmeans_recall_vs_exact(spark):
     learned cells beat the random-probing baseline (recall ≈ nprobe/cells
     if cells carried no information) by a clear factor, plus an absolute
     floor. Deterministic fixture + trainer → fixed numbers."""
-    from indian_address_parser_spark.queries import (
+    from indian_address_parser_spark.queries.sim import (
         _ivf_table_rows,
         ivf_cells_for,
         ivf_nprobe_for,

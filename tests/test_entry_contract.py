@@ -1,5 +1,7 @@
 """Smoke tests for the driver contract (__spark_entry__)."""
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 
@@ -27,29 +29,33 @@ class TestEntry:
         }
 
     def test_unregistered_queries_have_known_callers(self):
-        """Every module-level ``q_*`` function outside ``SPARK_QUERIES`` must
-        be one the comment above the registry names with its caller; a new
-        unregistered query (or a dead one) fails here until it is listed
-        or deleted."""
+        """Every module-level ``q_*`` function of the ``queries`` package
+        outside ``SPARK_QUERIES`` must be one the comment above the registry
+        names with its caller; a new unregistered query (or a dead one)
+        fails here until it is listed or deleted."""
         import ast
+        import glob
         import os
 
         root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        path = os.path.join(root, "indian_address_parser_spark", "queries.py")
-        with open(path, encoding="utf-8") as fh:
-            tree = ast.parse(fh.read())
+        pkg = os.path.join(root, "indian_address_parser_spark", "queries")
+        trees = {}
+        for path in sorted(glob.glob(os.path.join(pkg, "*.py"))):
+            with open(path, encoding="utf-8") as fh:
+                trees[os.path.basename(path)] = ast.parse(fh.read())
         defs = {
             n.name
+            for tree in trees.values()
             for n in tree.body
             if isinstance(n, ast.FunctionDef) and n.name.startswith("q_")
         }
         (registry,) = [
             n.value
-            for n in tree.body
+            for n in trees["__init__.py"].body
             if isinstance(n, ast.Assign)
             and any(getattr(t, "id", None) == "SPARK_QUERIES" for t in n.targets)
         ]
-        registered = {v.id for v in registry.values}
+        registered = {v.attr for v in registry.values}
         assert defs - registered == {
             "q_er_synth_addr",  # __spark_entry__.entry
             "q_dedup_ngram_jaccard",  # tests/test_dedup_sim.py
@@ -81,3 +87,36 @@ class TestOracleParity:
         res = run_check("/root/testdata/sf0.001", self.SUBSET)
         bad = {k: v for k, v in res.items() if v["status"] == "MISMATCH"}
         assert not bad, bad
+
+
+class TestOracleSqlsDegrade:
+    """Only an unreadable embeddings table degrades the learned-IVF oracle
+    to rows-only; any other failure propagates. No Spark session."""
+
+    @staticmethod
+    def _keys_without_ivf_kmeans():
+        from indian_address_parser_spark.queries import SPARK_QUERIES
+
+        rows_only = {"dedup_minhash128_xxhash_band_pairs", "sim_topk_ivf_kmeans"}
+        return set(SPARK_QUERIES) - rows_only
+
+    def test_missing_embeddings_omits_only_ivf_kmeans(self, tmp_path):
+        from indian_address_parser_spark.queries import oracle_sqls
+
+        assert set(oracle_sqls(str(tmp_path))) == self._keys_without_ivf_kmeans()
+
+    def test_corrupt_embeddings_omits_only_ivf_kmeans(self, tmp_path):
+        from indian_address_parser_spark.queries import oracle_sqls
+
+        (tmp_path / "embeddings.parquet").write_bytes(b"not a parquet file")
+        assert set(oracle_sqls(str(tmp_path))) == self._keys_without_ivf_kmeans()
+
+    def test_other_errors_propagate(self, tmp_path, monkeypatch):
+        from indian_address_parser_spark.queries import oracle_sqls, sim
+
+        def broken(sf_dir):
+            raise TypeError("trainer bug")
+
+        monkeypatch.setattr(sim, "train_ivf_centroids", broken)
+        with pytest.raises(TypeError, match="trainer bug"):
+            oracle_sqls(str(tmp_path))

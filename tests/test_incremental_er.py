@@ -328,3 +328,23 @@ class TestReconcile:
         assert _partition(reconcile(spark, men, asg)) == {frozenset({"u1#0", "u3#0"})}
         with pytest.raises(SparkRuntimeException, match="u3#0 is missing from the mention store"):
             reconcile(spark, lossy, asg).collect()
+
+
+class TestReadReps:
+    def test_missing_state_dir_reads_as_no_reps(self, spark, tmp_path):
+        from indian_address_parser_spark.streaming.incremental_er import _read_reps
+
+        assert _read_reps(spark, str(tmp_path / "state")) is None
+
+    def test_unreadable_state_dir_raises(self, spark, tmp_path):
+        """A state dir that exists but holds no parquet is an error, not a
+        first batch."""
+        from py4j.protocol import Py4JJavaError
+
+        from indian_address_parser_spark.streaming.incremental_er import _read_reps
+
+        state = tmp_path / "state"
+        state.mkdir()
+        (state / "part-00000.parquet").write_text("not parquet")
+        with pytest.raises(Py4JJavaError, match="parquet"):
+            _read_reps(spark, str(state))

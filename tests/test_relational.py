@@ -14,7 +14,7 @@ class TestRegionalRevenue:
         """nation/region must come in as broadcast joins (O(10²) rows at
         any scale); nothing in the 6-table join may fall back to a
         cartesian/nested-loop product."""
-        from indian_address_parser_spark.queries import q_join_regional_revenue
+        from indian_address_parser_spark.queries.relational import q_join_regional_revenue
 
         df = q_join_regional_revenue(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -25,7 +25,7 @@ class TestRegionalRevenue:
     def test_region_filter_prunes(self, spark):
         """The r_name filter must reach the region scan (predicate
         pushdown), not run post-join."""
-        from indian_address_parser_spark.queries import q_join_regional_revenue
+        from indian_address_parser_spark.queries.relational import q_join_regional_revenue
 
         df = q_join_regional_revenue(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -37,7 +37,7 @@ class TestStratifiedSample:
         """Exact-k-per-stratum output must be IDENTICAL under any input
         partition layout — the two-phase (per-partition pre-top-k, then
         per-stratum rank) construction only changes the intermediate."""
-        from indian_address_parser_spark.queries import q_train_stratified_sample
+        from indian_address_parser_spark.queries.train import q_train_stratified_sample
 
         base = sorted(
             (r["doc_id"], r["lang"], r["rk"])
@@ -47,7 +47,7 @@ class TestStratifiedSample:
         for n_parts in (1, 7):
             relaid = docs.repartition(n_parts)
             # rebuild the query over the re-laid frame via the same code path
-            import indian_address_parser_spark.queries as Q
+            import indian_address_parser_spark.queries.train as Q
 
             orig = Q._docs
             try:
@@ -63,7 +63,7 @@ class TestStratifiedSample:
     def test_exact_k_per_stratum(self, spark):
         from collections import Counter
 
-        from indian_address_parser_spark.queries import q_train_stratified_sample
+        from indian_address_parser_spark.queries.train import q_train_stratified_sample
 
         rows = q_train_stratified_sample(spark, SF_DIR, k=20).collect()
         per = Counter(r["lang"] for r in rows)
@@ -72,7 +72,7 @@ class TestStratifiedSample:
 
 class TestCanonicalKeep:
     def test_decision_table_covers_corpus_and_pairs(self, spark):
-        from indian_address_parser_spark.queries import (
+        from indian_address_parser_spark.queries.dedup import (
             q_dedup_canonical_keep,
             q_dedup_minhash128_band_pairs,
         )
@@ -92,9 +92,9 @@ class TestCanonicalKeep:
 
 class TestEventsWindowed:
     def test_hour_alignment_and_streaming_parity(self, spark):
-        """Window starts are epoch-aligned hour boundaries — identical
-        bucketing to the streaming windowed counts operator."""
-        from indian_address_parser_spark.queries import q_agg_events_windowed
+        """Window starts are epoch-aligned hour boundaries — the same
+        bucketing ``F.window`` gives a stream."""
+        from indian_address_parser_spark.queries.relational import q_agg_events_windowed
 
         rows = q_agg_events_windowed(spark, SF_DIR).collect()
         assert rows
@@ -108,7 +108,7 @@ class TestEventsWindowed:
     def test_single_shuffle_plan(self, spark):
         """One hash-agg pair around one exchange — window start is a
         row-local expression, so no extra shuffle or Python node."""
-        from indian_address_parser_spark.queries import q_agg_events_windowed
+        from indian_address_parser_spark.queries.relational import q_agg_events_windowed
 
         df = q_agg_events_windowed(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -132,7 +132,7 @@ class TestAsofJoin:
     def test_matches_brute_force(self, spark):
         """Union-and-carry result equals a driver-side brute-force as-of
         (latest purchase at-or-before, max event_id on ts ties)."""
-        from indian_address_parser_spark.queries import q_join_asof_events
+        from indian_address_parser_spark.queries.relational import q_join_asof_events
 
         events = spark.read.parquet(f"{SF_DIR}/events.parquet").collect()
         rights = {}
@@ -162,7 +162,7 @@ class TestAsofJoin:
         rows the max event_id wins; earlier-only rows carry forward."""
         from datetime import datetime
 
-        from indian_address_parser_spark.queries import q_join_asof_events
+        from indian_address_parser_spark.queries.relational import q_join_asof_events
 
         t0 = datetime(2024, 1, 1, 12, 0, 0)
         t1 = datetime(2024, 1, 1, 13, 0, 0)
@@ -186,7 +186,7 @@ class TestAsofJoin:
         """The whole point: NO O(n·m) range join. Sort-based single pass —
         no cartesian/nested-loop node, no Python, and the only joins are
         none at all (union + window)."""
-        from indian_address_parser_spark.queries import q_join_asof_events
+        from indian_address_parser_spark.queries.relational import q_join_asof_events
 
         plan = (
             q_join_asof_events(spark, SF_DIR)
@@ -202,7 +202,7 @@ class TestAsofJoin:
     def test_hot_key_prepass_identical_on_fixture(self, spark):
         """Bucketed two-phase carry must be row-identical to the oracle-
         green single-window plan on the driver fixture."""
-        from indian_address_parser_spark.queries import q_join_asof_events
+        from indian_address_parser_spark.queries.relational import q_join_asof_events
 
         base = {tuple(r) for r in q_join_asof_events(spark, SF_DIR).collect()}
         pre = {
@@ -221,7 +221,7 @@ class TestAsofJoin:
 
         import pyspark.sql.functions as F
 
-        from indian_address_parser_spark.queries import (
+        from indian_address_parser_spark.queries.relational import (
             ASOF_LEFT_TYPE,
             ASOF_RIGHT_TYPE,
             asof_union_carry,
@@ -290,7 +290,7 @@ class TestSessionize:
     def test_matches_brute_force(self, spark):
         from datetime import timezone
 
-        from indian_address_parser_spark.queries import (
+        from indian_address_parser_spark.queries.relational import (
             SESSION_GAP_US,
             q_events_sessionize,
         )
@@ -331,7 +331,7 @@ class TestSessionize:
         1 µs does — integer-microsecond arithmetic, no double rounding."""
         from datetime import datetime, timedelta
 
-        from indian_address_parser_spark.queries import q_events_sessionize
+        from indian_address_parser_spark.queries.relational import q_events_sessionize
 
         t0 = datetime(2024, 1, 1, 12, 0, 0)
         sf = _write_events(
@@ -352,7 +352,7 @@ class TestSessionize:
         """lag + running-sum share one (user_id) sort, and the final
         groupBy(user_id, sess_no) reuses the user_id partitioning — the
         whole operator is ONE shuffle."""
-        from indian_address_parser_spark.queries import q_events_sessionize
+        from indian_address_parser_spark.queries.relational import q_events_sessionize
 
         plan = (
             q_events_sessionize(spark, SF_DIR)
@@ -366,7 +366,7 @@ class TestSessionize:
 
 class TestDecontaminate:
     def test_matches_brute_force(self, spark):
-        from indian_address_parser_spark.queries import q_corpus_decontaminate
+        from indian_address_parser_spark.queries.train import q_corpus_decontaminate
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").collect()
 
@@ -392,7 +392,7 @@ class TestDecontaminate:
     def test_broadcast_semi_join_plan(self, spark):
         """The eval shingle vocabulary must arrive broadcast — the corpus
         side of the semi-join never shuffles."""
-        from indian_address_parser_spark.queries import q_corpus_decontaminate
+        from indian_address_parser_spark.queries.train import q_corpus_decontaminate
 
         plan = (
             q_corpus_decontaminate(spark, SF_DIR)
@@ -405,7 +405,7 @@ class TestDecontaminate:
     def test_broadcast_gate_falls_back_to_shuffled_semi_join(self, spark):
         """Past the count gate the plan must degrade to a shuffled semi-
         join (no force-broadcast driver-OOM cliff) with identical rows."""
-        from indian_address_parser_spark.queries import q_corpus_decontaminate
+        from indian_address_parser_spark.queries.train import q_corpus_decontaminate
 
         # isolate the FORCE hint from the planner's own (size-bounded, safe)
         # broadcast choice: with auto-broadcast off, only the hint can
@@ -442,7 +442,7 @@ class TestDistinctUsers:
         configured rsd of the oracled exact distinct counts."""
         from pyspark.sql import functions as F  # noqa: F811
 
-        from indian_address_parser_spark.queries import q_agg_distinct_users
+        from indian_address_parser_spark.queries.relational import q_agg_distinct_users
 
         exact = {
             r["event_type"]: r["n_users"]
@@ -462,7 +462,7 @@ class TestDistinctUsers:
 
 class TestSlidingWindows:
     def test_every_event_in_exactly_two_windows(self, spark):
-        from indian_address_parser_spark.queries import q_agg_events_sliding
+        from indian_address_parser_spark.queries.relational import q_agg_events_sliding
 
         rows = q_agg_events_sliding(spark, SF_DIR).collect()
         n_input = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
@@ -474,7 +474,7 @@ class TestSlidingWindows:
 
 class TestSetOps:
     def test_matches_python_set_arithmetic(self, spark):
-        from indian_address_parser_spark.queries import q_set_ops_custkeys
+        from indian_address_parser_spark.queries.relational import q_set_ops_custkeys
 
         orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").collect()
         cust = spark.read.parquet(f"{SF_DIR}/customer.parquet").collect()
@@ -492,7 +492,7 @@ class TestTfidf:
     def test_matches_brute_force(self, spark):
         import math
 
-        from indian_address_parser_spark.queries import (
+        from indian_address_parser_spark.queries.text import (
             TFIDF_TOPK,
             q_text_tfidf_top_terms,
         )
@@ -527,7 +527,7 @@ class TestQuantiles:
     def test_matches_numpy_linear_interpolation(self, spark):
         import numpy as np
 
-        from indian_address_parser_spark.queries import QUANTILE_PROBS, q_agg_quantiles
+        from indian_address_parser_spark.queries.relational import QUANTILE_PROBS, q_agg_quantiles
 
         orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").collect()
         by_pri = {}
@@ -549,7 +549,7 @@ class TestQuantiles:
         import numpy as np
         from pyspark.sql import functions as F  # noqa: F811
 
-        from indian_address_parser_spark.queries import QUANTILE_PROBS, q_agg_quantiles
+        from indian_address_parser_spark.queries.relational import QUANTILE_PROBS, q_agg_quantiles
 
         accuracy = 1000
         o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
